@@ -5,10 +5,13 @@ per table: archived timeline first, then active (TableMetadataUploaderService.ja
 -> filter -> sort -> batch -> mirror -> checkpoint upsert.
 
 The reference iterates tables in batches of 20 on a thread pool; here the
-per-table work is data-parallel: listings fan out as Spark jobs, the
+per-file work is data-parallel: listings fan out as Spark jobs, the
 batcher runs per-table inside applyInPandas, and the mirror sink is a
 foreachPartition writer. Per-table sequential ordering (batches strictly
 ordered, archived before active) is preserved inside each table's group.
+The per-table control state (the table list, checkpoints, manifest
+versions) stays in plain Python on the driver: one row per table is
+cheaper to hold than a Spark job is to launch.
 
 CONTINUOUS mode (§3.2) wraps run_once in a driver loop — same dataflow,
 trigger semantics of a 30 min discovery / 5 min upload cadence.
@@ -17,6 +20,7 @@ trigger semantics of a 30 min discovery / 5 min upload cadence.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +32,7 @@ from lakeview_spark.constants import (
     HISTORY_FOLDER_NAME,
     HOODIE_FOLDER_NAME,
     HOODIE_PROPERTIES_FILE,
+    INITIAL_CHECKPOINT,
     TIMELINE_FOLDER_NAME,
     TIMELINE_LAYOUT_VERSION_V2,
 )
@@ -41,16 +46,6 @@ from lakeview_spark.operators.uploader import (
 )
 from lakeview_spark.sources.listing import Lister, discover_tables, list_dir_local
 from lakeview_spark.sources.properties import read_hoodie_properties
-
-# Output shape of compute_checkpoint_updates (kept as documentation of
-# the checkpoint-update contract; the columnar rewrite selects these
-# columns/types directly instead of declaring an applyInPandas schema)
-CHECKPOINT_UPDATE_SCHEMA = (
-    "table_id string, batch_id int, checkpoint_ts timestamp, last_uploaded_file string, "
-    "first_incomplete_commit_file string, archived_commits_processed boolean, "
-    "last_archived_manifest_version int"
-)
-
 
 def timeline_dir(table_uri: str, layout_version: int, timeline_type: str) -> str:
     """Timeline folder per layout (TimelineCommitInstantsUploader.java:922-936)."""
@@ -204,89 +199,77 @@ def process_archived_v2(
     last_archived_manifest_version, upload the manifest-listed parquet
     files that the previously-processed manifest did not list (anti
     join on fileName), then record the new version. Manifest files are
-    tiny (KBs) so the per-table reads are a distributed parallelize
-    probe, not a driver loop over storage calls.
+    tiny (KBs), so one distributed parallelize probe reads every table's
+    `_version_`, current manifest and previous manifest and returns the
+    new files; the checkpoints are one driver snapshot.
     """
-    from lakeview_spark.sources.manifest import read_manifest
-
     v2_tables = [t for t in tables if t.get("timeline_layout_version") == 2]
     if not v2_tables:
         return {"v2_tables": 0}
-    ckpts = {r.table_id: r for r in store.load().collect()}
+    ckpts = store.snapshot()
 
-    def probe(t):
+    def processed_version(table_id):
+        """The manifest version already mirrored, None if none was."""
+        ck = ckpts.get(table_id)
+        return ck["last_archived_manifest_version"] if ck and ck["archived_commits_processed"] else None
+
+    def probe(item):
         import json as _json
         import os as _os
+
+        t, prev = item
+        d = timeline_dir(t["table_uri"], 2, ARCHIVED)
+
+        def manifest_files(version):
+            with open(_os.path.join(d, f"manifest_{version}")) as f:
+                return [x["fileName"] for x in _json.load(f).get("files", [])]
 
         # per-table failures (corrupt _version_/manifest) are skipped, not
         # fatal — reference logs and continues (TableDiscoveryService
         # exceptionally -> emptySet pattern)
         try:
-            d = timeline_dir(t["table_uri"], 2, ARCHIVED)
-            out = []
             vf = _os.path.join(d, "_version_")
-            if _os.path.exists(vf):
-                with open(vf) as f:
-                    version = int(f.read().strip())
-                mf = _os.path.join(d, f"manifest_{version}")
-                files = []
-                if _os.path.exists(mf):
-                    with open(mf) as f:
-                        files = [x["fileName"] for x in _json.load(f).get("files", [])]
-                out.append((t["table_id"], version, files))
-            return out
+            if not _os.path.exists(vf):
+                return []
+            with open(vf) as f:
+                version = int(f.read().strip())
+            if prev is not None and version <= prev:
+                return []  # nothing new since the mirrored manifest
+            files = []
+            if _os.path.exists(_os.path.join(d, f"manifest_{version}")):
+                files = manifest_files(version)
         except (ValueError, OSError, KeyError):
             return []
+        prev_files: set = set()
+        if prev:
+            try:
+                prev_files = set(manifest_files(prev))
+            except (ValueError, OSError, KeyError):
+                pass  # unreadable previous manifest: upload everything listed
+        return [(t["table_id"], version, [f for f in files if f not in prev_files])]  # J4
 
+    items = [(t, processed_version(t["table_id"])) for t in v2_tables]
     sc = spark.sparkContext
-    results = sc.parallelize(v2_tables, max(1, min(len(v2_tables), 256))).flatMap(probe).collect()
+    results = sc.parallelize(items, max(1, min(len(items), 256))).flatMap(probe).collect()
 
     uploaded = 0
     updates = []
     tables_by_id = {x["table_id"]: x for x in v2_tables}
-    for table_id, version, files in results:
-        ck = ckpts.get(table_id)
-        prev_version = ck.last_archived_manifest_version if ck else 0
-        if version <= prev_version and (ck and ck.archived_commits_processed):
-            continue
-        prev_files: set = set()
-        if prev_version and ck and ck.archived_commits_processed:
-            t = tables_by_id[table_id]
-            d = timeline_dir(t["table_uri"], 2, ARCHIVED)
-            prev_manifest = os.path.join(d, f"manifest_{prev_version}")
-            if os.path.exists(prev_manifest):
-                prev_files = {
-                    r.fileName for r in read_manifest(spark, prev_manifest).collect()
-                }
-        new_files = [f for f in files if f not in prev_files]  # J4 anti join
+    for table_id, version, new_files in results:
         if mirror_dir and new_files:
             t = tables_by_id[table_id]
             d = timeline_dir(t["table_uri"], 2, ARCHIVED)
-            import shutil as _sh
-
             for fn in new_files:
-                src = os.path.join(d, fn)
                 dest = os.path.join(mirror_dir, table_id, "archived", fn)
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
-                _sh.copyfile(src, dest)
+                shutil.copyfile(os.path.join(d, fn), dest)
         uploaded += len(new_files)
-        base = ck.asDict() if ck else dict(
-            table_id=table_id, batch_id=0, checkpoint_ts=None, last_uploaded_file="",
-            first_incomplete_commit_file="", archived_commits_processed=False,
-            last_archived_manifest_version=0,
+        base = ckpts.get(table_id) or {"table_id": table_id, **INITIAL_CHECKPOINT}
+        updates.append(
+            {**base, "archived_commits_processed": True, "last_archived_manifest_version": version}
         )
-        base.update(
-            archived_commits_processed=True, last_archived_manifest_version=version
-        )
-        updates.append(tuple(base[k] for k in (
-            "table_id", "batch_id", "checkpoint_ts", "last_uploaded_file",
-            "first_incomplete_commit_file", "archived_commits_processed",
-            "last_archived_manifest_version",
-        )))
     if updates:
-        from lakeview_spark.schemas import CHECKPOINTS_SCHEMA
-
-        store.upsert(spark.createDataFrame(updates, CHECKPOINTS_SCHEMA))
+        store.upsert(updates)
     return {"v2_tables": len(v2_tables), "v2_files_uploaded": uploaded}
 
 
@@ -300,10 +283,9 @@ def discover_round(
     table list (the `tablesToProcess` snapshot of
     TableDiscoveryAndUploadJob.java:43,150-156) and its metrics."""
     metrics: dict = {}
-    tables_df = discover_tables(
-        spark, config.parser_config, config.path_exclusion_patterns, lister
+    tables = discover_tables(
+        spark, config.parser_config, config.path_exclusion_patterns, lister, as_rows=True
     )
-    tables = [r.asDict() for r in tables_df.collect()]
     metrics["tables_discovered"] = len(tables)
 
     # properties: one distributed read over every table's hoodie.properties;
@@ -347,10 +329,7 @@ def upload_round(
     CONTINUOUS mode can run the two on independent cadences."""
     metrics: dict = {}
     store = CheckpointStore(spark, os.path.join(state_dir, "checkpoints"))
-    tables_id_df = spark.createDataFrame(
-        [(t["table_id"],) for t in tables], "table_id string"
-    )
-    metrics["tables_initialized"] = store.initialize_tables(tables_id_df)
+    metrics["tables_initialized"] = store.initialize_tables(t["table_id"] for t in tables)
 
     # tables whose properties read/parse failed are SKIPPED from timeline
     # processing — uploading against a guessed timeline layout version
@@ -367,15 +346,18 @@ def upload_round(
         if timeline_type == ARCHIVED:
             # archived timeline is processed once ever (README.md:423-427):
             # skip tables whose checkpoint says archived_commits_processed
-            done = {
-                r.table_id
-                for r in store.load().filter("archived_commits_processed").collect()
-            }
+            done = {k for k, ck in store.snapshot().items() if ck["archived_commits_processed"]}
             scope = [t for t in healthy if t["table_id"] not in done]
-        files_df = list_timeline_files(spark, scope, timeline_type, lister)
-        if files_df.isEmpty():
+        if not scope:
             metrics[f"{timeline_type}_files"] = 0
             continue
+        # the listing runs once: batching, the mirror and the checkpoint
+        # join all read the cached files; the accumulator tells an empty
+        # listing from one with nothing new to upload
+        listed = spark.sparkContext.accumulator(0)
+        files_df = list_timeline_files(
+            spark, scope, timeline_type, _counting(lister, listed)
+        ).cache()
         ckpts = store.load()
         candidates = files_to_upload(
             files_df, ckpts, timeline_type, config.upload_strategy
@@ -403,9 +385,13 @@ def upload_round(
             )
         batches = batches.cache()
         n = batches.count()
-        metrics[f"{timeline_type}_batched_files"] = n
+        if listed.value == 0:
+            metrics[f"{timeline_type}_files"] = 0
+        else:
+            metrics[f"{timeline_type}_batched_files"] = n
         if n == 0:
             batches.unpersist()
+            files_df.unpersist()
             continue
 
         if mirror_dir:
@@ -434,8 +420,20 @@ def upload_round(
         updates = compute_checkpoint_updates(batches, files_df, ckpts, timeline_type)
         store.upsert(updates)
         batches.unpersist()
+        files_df.unpersist()
 
     return metrics
+
+
+def _counting(lister: Lister, acc) -> Lister:
+    """``lister`` that adds the number of entries it returns to ``acc``."""
+
+    def counted(path):
+        entries = lister(path)
+        acc.add(len(entries))
+        return entries
+
+    return counted
 
 
 def run_once(

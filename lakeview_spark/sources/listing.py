@@ -27,7 +27,6 @@ from datetime import datetime
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lakeview_spark.constants import HOODIE_FOLDER_NAME
 from lakeview_spark.functions.ids import uuid3_from_uri
@@ -80,8 +79,11 @@ def discover_tables(
     exclusion_patterns: list[str] | None = None,
     lister: Lister = list_dir_local,
     max_depth: int = 64,
-) -> DataFrame:
-    """BFS discovery -> tables DataFrame.
+    as_rows: bool = False,
+) -> DataFrame | list[dict]:
+    """BFS discovery -> tables DataFrame, or with ``as_rows`` the same
+    rows as driver dicts (the extractor round keeps its table list on
+    the driver).
 
     ``parser_config``: [{lake, databases: [{name, basePaths: [...]}]}]
     (ConfigV1 parserConfig shape, configv1/ParserConfig.java:12-15).
@@ -134,20 +136,27 @@ def discover_tables(
     per_bp: dict[str, list] = {}
     for row in found:
         per_bp.setdefault(row[3], []).append(row)
-    rows = []
+    rows: dict[tuple, dict] = {}
     for bp, tables in per_bp.items():
         _, pinned_id = split_base_path_config(bp)
-        if pinned_id:
-            if len(tables) != 1:
-                continue
-            uri, lake, db, _ = tables[0]
-            rows.append((pinned_id, uri, lake, db))
-        else:
-            for uri, lake, db, _ in tables:
-                rows.append((uuid3_from_uri(uri), uri, lake, db))
-
-    df = spark.createDataFrame(
-        rows, "table_id string, table_uri string, lake string, database string"
+        if pinned_id and len(tables) != 1:
+            continue
+        for uri, lake, db, _ in tables:
+            # union across base paths can rediscover the same table (U1):
+            # the first base path that found it wins
+            rows.setdefault(
+                (uri, lake, db),
+                {
+                    "table_id": pinned_id or uuid3_from_uri(uri),
+                    "table_uri": uri,
+                    "lake": lake,
+                    "database": db,
+                },
+            )
+    out = sorted(rows.values(), key=lambda r: r["table_uri"])
+    if as_rows:
+        return out
+    return spark.createDataFrame(
+        [tuple(r.values()) for r in out],
+        "table_id string, table_uri string, lake string, database string",
     )
-    # union across base paths can rediscover the same table (U1)
-    return df.dropDuplicates(["table_uri", "lake", "database"]).orderBy("table_uri")

@@ -24,12 +24,12 @@ from lakeview_spark.sources.listing import discover_tables
 from lakeview_spark.sources.manifest import manifest_diff, read_manifest, read_manifest_version
 from lakeview_spark.sources.properties import read_hoodie_properties
 
-# slow tier (deselected by the default "-m not slow" addopts; the
-# builder's close battery runs the full suite with -m "slow or not
-# slow"): end-to-end / property-simulation coverage that exceeds the
-# round driver's pytest budget — correctness gating lives in
-# test_oracle_parity + the hygiene/golden suites, which stay fast
-pytestmark = pytest.mark.slow
+# Most tests here are in the slow tier (deselected by the default
+# "-m not slow" addopts; the close battery runs the full suite with
+# -m "slow or not slow"). The three V1 run_once rounds (end to end,
+# incremental, mirror failure) stay in the fast tier: they gate the
+# extractor round itself.
+slow = pytest.mark.slow
 
 
 
@@ -84,6 +84,7 @@ PARSER_CFG = lambda root: [  # noqa: E731
 ]
 
 
+@slow
 def test_discovery_finds_tables_and_prunes(spark, lake):
     df = discover_tables(
         spark, PARSER_CFG(lake), exclusion_patterns=[r".*excluded.*"]
@@ -95,6 +96,7 @@ def test_discovery_finds_tables_and_prunes(spark, lake):
     assert r.lake == "lake1" and r.database == "db1"
 
 
+@slow
 def test_discovery_table_id_override(spark, lake):
     cfg = [
         {
@@ -107,6 +109,7 @@ def test_discovery_table_id_override(spark, lake):
     assert len(rows) == 1 and rows[0].table_id == "my-pinned-id"
 
 
+@slow
 def test_discovery_override_requires_exactly_one(spark, lake):
     cfg = [
         {
@@ -118,6 +121,7 @@ def test_discovery_override_requires_exactly_one(spark, lake):
     assert discover_tables(spark, cfg).count() == 0
 
 
+@slow
 def test_properties_reader_defaults(spark, tmp_path):
     p1 = tmp_path / "a.properties"
     p1.write_text("#c\nhoodie.table.name=t1\nhoodie.table.type=COPY_ON_WRITE\n")
@@ -135,6 +139,7 @@ def test_properties_reader_defaults(spark, tmp_path):
     assert rows["t1"].failure_reason is None and rows["t2"].failure_reason is None
 
 
+@slow
 def test_properties_reader_accepts_colon_separator_and_bang_comments(spark, tmp_path):
     """java.util.Properties treats ':' as a separator and '!' as a
     comment leader (Properties.load javadoc) — a file the reference
@@ -153,6 +158,7 @@ def test_properties_reader_accepts_colon_separator_and_bang_comments(spark, tmp_
     assert r.table_version == 8
 
 
+@slow
 def test_properties_reader_failure_reason(spark, tmp_path):
     """Corrupt/missing hoodie.properties -> reference sentinel row
     (ParsedHudiProperties.java:16-22, HoodiePropertiesReader.java:62-80):
@@ -187,6 +193,7 @@ def test_properties_reader_failure_reason(spark, tmp_path):
     assert rows["gone.properties"].table_name == ""
 
 
+@slow
 def test_run_once_survives_corrupt_and_missing_properties(spark, tmp_path):
     """A table whose hoodie.properties is corrupt (or absent) must not
     abort the extractor run — the reference degrades it to a sentinel
@@ -227,6 +234,7 @@ def test_run_once_survives_corrupt_and_missing_properties(spark, tmp_path):
     assert os.listdir(mirror) == [good_id]
 
 
+@slow
 def test_manifest_reader_and_diff(spark, tmp_path):
     v = tmp_path / "_version_"
     v.write_text("3\n")
@@ -245,6 +253,7 @@ def test_manifest_reader_and_diff(spark, tmp_path):
     assert [r.fileName for r in diff] == ["20260116_20260131_0.parquet"]
 
 
+@slow
 def test_checkpoint_store_roundtrip(spark, tmp_path):
     store = CheckpointStore(spark, str(tmp_path / "ckpts"))
     assert store.load().count() == 0
@@ -266,6 +275,7 @@ def test_checkpoint_store_roundtrip(spark, tmp_path):
     assert got["t2"].batch_id == 0  # untouched
 
 
+@slow
 def test_files_to_upload_filters(spark):
     t = datetime(2026, 1, 10)
     old = datetime(2025, 1, 1)
@@ -305,6 +315,7 @@ def test_files_to_upload_filters(spark):
     assert "hoodie.properties" in got0 and "200.commit" in got0 and "100.commit" in got0
 
 
+@slow
 def test_files_to_upload_continue_never_skips_by_commit_id(spark):
     t = datetime(2026, 1, 10)
     files = spark.createDataFrame(
@@ -325,6 +336,7 @@ def test_files_to_upload_continue_never_skips_by_commit_id(spark):
     assert got == {"100.commit"}  # :856-861
 
 
+@slow
 def test_archived_numeric_ordering_and_skip(spark):
     t = datetime(2026, 1, 10)
     files = spark.createDataFrame(
@@ -354,6 +366,7 @@ def test_archived_numeric_ordering_and_skip(spark):
     ]
 
 
+@slow
 def test_last_uploaded_lookback_rules():
     # archived -> last
     assert last_uploaded_file_from_batch([".commits_.archive.1_1-0-1"], ARCHIVED) == ".commits_.archive.1_1-0-1"
@@ -378,6 +391,7 @@ def test_last_uploaded_lookback_rules():
     assert last_uploaded_file_from_batch(batch, ACTIVE) == "666.rollback"
 
 
+@slow
 def test_start_after_rules():
     ck = {"last_uploaded_file": "", "first_incomplete_commit_file": ""}
     assert start_after(ck, "BLOCK_ON_INCOMPLETE_COMMIT") is None
@@ -390,6 +404,7 @@ def test_start_after_rules():
     assert start_after(ck, "CONTINUE_ON_INCOMPLETE_COMMIT", is_first_fetch=False) == "200.commit"
 
 
+@slow
 def test_config_validation():
     ok = {
         "version": "V1",
@@ -553,6 +568,7 @@ def test_run_once_incremental_second_run_uploads_only_new_commits(spark, lake, t
         assert f.read() == "x"
 
 
+@slow
 def test_continue_strategy_checkpoint_sequence_reference_scenario(spark):
     """Port of ContinueOnIncompleteCommitStrategyTest.java:102-256: the
     mixed timeline (111 complete, 222 stale-incomplete, 333 clean, 444/
@@ -619,6 +635,7 @@ def test_continue_strategy_checkpoint_sequence_reference_scenario(spark):
     assert update.checkpoint_ts == fresh
 
 
+@slow
 def test_closed_form_batching_replay_matches_packer():
     """Validates the theorem behind the r8 active_batch_packing /
     checkpoint_lookback oracles (plans/coverage.py _BATCH_CTE): on a
