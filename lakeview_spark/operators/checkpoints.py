@@ -19,9 +19,10 @@ of the per-file operators.
 
 Every write goes to a hidden temporary file in the store directory,
 synced to disk, and one `os.replace` swaps it in, so a crash at any
-point leaves the old or the new state, never none. A store written by the earlier Spark writer
-(a directory of `part-*.parquet` files) still loads; once the first
-write has replaced it, its part files are removed and never read again.
+point leaves the old or the new state, never none. A store written by
+the earlier Spark writer (a directory of `part-*.parquet` files) still
+loads; once the first write has replaced it, its part files are removed
+and never read again.
 
 Timestamps convert the way PySpark does (TimestampType.toInternal /
 fromInternal): a naive datetime is local wall time. Rows from
@@ -38,6 +39,7 @@ from typing import Iterable
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import TimestampType
 
 from lakeview_spark.constants import INITIAL_CHECKPOINT
@@ -45,26 +47,14 @@ from lakeview_spark.schemas import CHECKPOINTS_SCHEMA
 
 STORE_FILE = "checkpoints.parquet"
 FIELDS = [f.name for f in CHECKPOINTS_SCHEMA.fields]
-ARROW_SCHEMA = pa.schema(
-    [
-        ("table_id", pa.string()),
-        ("batch_id", pa.int32()),
-        ("checkpoint_ts", pa.timestamp("us", tz="UTC")),
-        ("last_uploaded_file", pa.string()),
-        ("first_incomplete_commit_file", pa.string()),
-        ("archived_commits_processed", pa.bool_()),
-        ("last_archived_manifest_version", pa.int32()),
-    ]
-)
+ARROW_SCHEMA = to_arrow_schema(CHECKPOINTS_SCHEMA)
 _TS = TimestampType()
 
 
 def _as_dict(row) -> dict:
-    """A Row, a dict or a tuple in CHECKPOINTS_SCHEMA order -> row dict."""
+    """A Row or a dict -> row dict with exactly the store's fields."""
     if hasattr(row, "asDict"):
         row = row.asDict()
-    elif not isinstance(row, dict):
-        row = dict(zip(FIELDS, row))
     return {k: row.get(k) for k in FIELDS}
 
 

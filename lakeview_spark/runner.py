@@ -283,9 +283,7 @@ def discover_round(
     table list (the `tablesToProcess` snapshot of
     TableDiscoveryAndUploadJob.java:43,150-156) and its metrics."""
     metrics: dict = {}
-    tables = discover_tables(
-        spark, config.parser_config, config.path_exclusion_patterns, lister, as_rows=True
-    )
+    tables = discover_tables(spark, config.parser_config, config.path_exclusion_patterns, lister)
     metrics["tables_discovered"] = len(tables)
 
     # properties: one distributed read over every table's hoodie.properties;
@@ -351,13 +349,13 @@ def upload_round(
         if not scope:
             metrics[f"{timeline_type}_files"] = 0
             continue
-        # the listing runs once: batching, the mirror and the checkpoint
-        # join all read the cached files; the accumulator tells an empty
-        # listing from one with nothing new to upload
-        listed = spark.sparkContext.accumulator(0)
-        files_df = list_timeline_files(
-            spark, scope, timeline_type, _counting(lister, listed)
-        ).cache()
+        # the listing runs once, in this count: batching, the mirror and
+        # the checkpoint join all read the cached files
+        files_df = list_timeline_files(spark, scope, timeline_type, lister).cache()
+        if files_df.count() == 0:
+            metrics[f"{timeline_type}_files"] = 0
+            files_df.unpersist()
+            continue
         ckpts = store.load()
         candidates = files_to_upload(
             files_df, ckpts, timeline_type, config.upload_strategy
@@ -385,10 +383,7 @@ def upload_round(
             )
         batches = batches.cache()
         n = batches.count()
-        if listed.value == 0:
-            metrics[f"{timeline_type}_files"] = 0
-        else:
-            metrics[f"{timeline_type}_batched_files"] = n
+        metrics[f"{timeline_type}_batched_files"] = n
         if n == 0:
             batches.unpersist()
             files_df.unpersist()
@@ -423,17 +418,6 @@ def upload_round(
         files_df.unpersist()
 
     return metrics
-
-
-def _counting(lister: Lister, acc) -> Lister:
-    """``lister`` that adds the number of entries it returns to ``acc``."""
-
-    def counted(path):
-        entries = lister(path)
-        acc.add(len(entries))
-        return entries
-
-    return counted
 
 
 def run_once(

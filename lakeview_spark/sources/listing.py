@@ -26,7 +26,7 @@ import re
 from datetime import datetime
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from lakeview_spark.constants import HOODIE_FOLDER_NAME
 from lakeview_spark.functions.ids import uuid3_from_uri
@@ -79,11 +79,10 @@ def discover_tables(
     exclusion_patterns: list[str] | None = None,
     lister: Lister = list_dir_local,
     max_depth: int = 64,
-    as_rows: bool = False,
-) -> DataFrame | list[dict]:
-    """BFS discovery -> tables DataFrame, or with ``as_rows`` the same
-    rows as driver dicts (the extractor round keeps its table list on
-    the driver).
+) -> list[dict]:
+    """BFS discovery -> one dict per table (table_id, table_uri, lake,
+    database), sorted by table_uri. The list stays on the driver: the
+    extractor round keeps its per-table control state there.
 
     ``parser_config``: [{lake, databases: [{name, basePaths: [...]}]}]
     (ConfigV1 parserConfig shape, configv1/ParserConfig.java:12-15).
@@ -153,10 +152,4 @@ def discover_tables(
                     "database": db,
                 },
             )
-    out = sorted(rows.values(), key=lambda r: r["table_uri"])
-    if as_rows:
-        return out
-    return spark.createDataFrame(
-        [tuple(r.values()) for r in out],
-        "table_id string, table_uri string, lake string, database string",
-    )
+    return sorted(rows.values(), key=lambda r: r["table_uri"])

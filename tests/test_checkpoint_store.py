@@ -20,7 +20,15 @@ from lakeview_spark.schemas import CHECKPOINTS_SCHEMA
 
 
 def row(table_id, batch_id, ts=datetime(2026, 1, 2), last="", archived=False, version=0):
-    return (table_id, batch_id, ts, last, "", archived, version)
+    return {
+        "table_id": table_id,
+        "batch_id": batch_id,
+        "checkpoint_ts": ts,
+        "last_uploaded_file": last,
+        "first_incomplete_commit_file": "",
+        "archived_commits_processed": archived,
+        "last_archived_manifest_version": version,
+    }
 
 
 def by_id(rows):

@@ -86,14 +86,14 @@ PARSER_CFG = lambda root: [  # noqa: E731
 
 @slow
 def test_discovery_finds_tables_and_prunes(spark, lake):
-    df = discover_tables(
+    tables = discover_tables(
         spark, PARSER_CFG(lake), exclusion_patterns=[r".*excluded.*"]
     )
-    rows = {r.table_uri: r for r in df.collect()}
+    rows = {r["table_uri"]: r for r in tables}
     assert set(rows) == {f"{lake}/tbl1", f"{lake}/nested/tbl2"}
     r = rows[f"{lake}/tbl1"]
-    assert r.table_id == uuid3_from_uri(f"{lake}/tbl1")
-    assert r.lake == "lake1" and r.database == "db1"
+    assert r["table_id"] == uuid3_from_uri(f"{lake}/tbl1")
+    assert r["lake"] == "lake1" and r["database"] == "db1"
 
 
 @slow
@@ -104,9 +104,8 @@ def test_discovery_table_id_override(spark, lake):
             "databases": [{"name": "db1", "basePaths": [f"{lake}/tbl1#my-pinned-id"]}],
         }
     ]
-    df = discover_tables(spark, cfg)
-    rows = df.collect()
-    assert len(rows) == 1 and rows[0].table_id == "my-pinned-id"
+    rows = discover_tables(spark, cfg)
+    assert len(rows) == 1 and rows[0]["table_id"] == "my-pinned-id"
 
 
 @slow
@@ -118,7 +117,7 @@ def test_discovery_override_requires_exactly_one(spark, lake):
         }
     ]
     # base path discovers 3 tables -> override skipped entirely (O3)
-    assert discover_tables(spark, cfg).count() == 0
+    assert len(discover_tables(spark, cfg)) == 0
 
 
 @slow

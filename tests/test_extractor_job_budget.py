@@ -18,11 +18,11 @@ import uuid
 from lakeview_spark.config import load_config
 from lakeview_spark.runner import run_once
 
-# Spark jobs per round. On Spark 4.1 local[4] the rounds take 35, 29-30
-# and 23 jobs (17 of them the batcher's adaptive-execution stages). With
+# Spark jobs per round. On Spark 4.1 local[4] the rounds take 37, 26
+# and 20 jobs (17 of them the batcher's adaptive-execution stages). With
 # the checkpoint store on Spark jobs, a per-table manifest read and a
 # second listing per timeline, the same rounds took 63, 41 and 25.
-JOB_CEILING = {"cold": 38, "delta": 32, "noop": 25}
+JOB_CEILING = {"cold": 40, "delta": 29, "noop": 23}
 
 
 def _write(path, text="x"):

@@ -162,8 +162,8 @@ def test_discovery_runs_through_object_store_lister(spark):
         spark,
         [{"lake": "l1", "databases": [{"name": "db1", "basePaths": ["s3://lake/warehouse/db1"]}]}],
         lister=store.as_lister(),
-    ).collect()
-    uris = sorted(r.table_uri for r in tables)
+    )
+    uris = sorted(r["table_uri"] for r in tables)
     assert uris == ["s3://lake/warehouse/db1/t1", "s3://lake/warehouse/db1/t2"]
 
 
@@ -674,10 +674,10 @@ def test_azure_discovery_end_to_end(spark):
             }
         ],
         lister=store.as_lister(),
-    ).collect()
-    uris = sorted(r.table_uri for r in tables)
+    )
+    uris = sorted(r["table_uri"] for r in tables)
     assert uris == [base + "/t1", base + "/t2"]
-    assert {r.database for r in tables} == {"db1"}
+    assert {r["database"] for r in tables} == {"db1"}
 
 
 def test_azure_timeline_paging_and_checkpoint_resume(spark):
