@@ -14,20 +14,20 @@ Reference: TimelineCommitInstantsUploader.java —
   savepoint tail -> 2nd-to-last; rollback tail -> 1/2/3-file lookback;
   otherwise 3rd-to-last
 
-All filters are single-pass columnar predicates (Catalyst pushes them to
-the scan); only the per-batch lookback is Python, and it runs on the tiny
-per-batch tail, driver- or task-side.
+The rules run per table in plain Python, inside the task that uploads
+the table: one table's timeline is O(100) names, and the rules are
+sequential within a table anyway (sort, pack, look back).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import re
 
 from lakeview_spark.constants import (
     ACTIVE_COMMIT_INSTANT_PATTERN,
     ARCHIVED_COMMIT_INSTANT_PATTERN,
     ARCHIVED_COMMIT_INSTANT_PATTERN_V2,
+    EPOCH,
     HOODIE_PROPERTIES_FILE,
     SAVEPOINT_ACTION,
     ROLLBACK_ACTION,
@@ -38,122 +38,98 @@ from lakeview_spark.operators.batcher import (
     CONTINUE,
     _are_related,
     _are_related_sp_rb,
+    _sort_key,
     parse_instant,
 )
 
 ACTIVE = "active"
 ARCHIVED = "archived"
 
-
-def is_instant_file(filename: Column) -> Column:
-    """isInstantFile (:876-880): any of the three full-match patterns."""
-    return (
-        filename.rlike(full_match(ACTIVE_COMMIT_INSTANT_PATTERN))
-        | filename.rlike(full_match(ARCHIVED_COMMIT_INSTANT_PATTERN))
-        | filename.rlike(full_match(ARCHIVED_COMMIT_INSTANT_PATTERN_V2))
+# Java regex semantics: `\d` is ASCII-only, `$` may precede a final newline
+_INSTANT_RES = [
+    re.compile(full_match(p), re.ASCII)
+    for p in (
+        ACTIVE_COMMIT_INSTANT_PATTERN,
+        ARCHIVED_COMMIT_INSTANT_PATTERN,
+        ARCHIVED_COMMIT_INSTANT_PATTERN_V2,
     )
+]
+_ARCHIVED_NUMERIC_RE = re.compile(V1_ARCHIVED_NUMERIC_PATTERN, re.ASCII)
 
 
-def commit_id_col(filename: Column) -> Column:
-    """Active-timeline commit id as DECIMAL(38,0) (:940-946)."""
-    tok0 = F.split(filename, r"\.", 2)[0]
-    return F.split(tok0, "_", 2)[0].try_cast("decimal(38,0)")
+def is_instant_file(name: str) -> bool:
+    """isInstantFile (:876-880): any of the three full-match patterns."""
+    return any(r.match(name) for r in _INSTANT_RES)
 
 
-def archived_numeric_col(filename: Column) -> Column:
-    """Numeric token of a V1 archived name (:948-956)."""
-    return F.regexp_extract(filename, V1_ARCHIVED_NUMERIC_PATTERN, 1).try_cast("long")
+def commit_id(name: str) -> int | None:
+    """Active-timeline commit id (:940-946), None where a DECIMAL(38,0)
+    cast of the leading token fails."""
+    tok = name.split(".", 1)[0].split("_", 1)[0]
+    return int(tok) if tok.isascii() and tok.isdigit() and len(tok.lstrip("0")) <= 38 else None
+
+
+def archived_number(name: str) -> int | None:
+    """Numeric token of a V1 archived name (:948-956), None when absent
+    or past a long."""
+    m = _ARCHIVED_NUMERIC_RE.search(name)
+    n = int(m.group(1)) if m else None
+    return n if n is not None and n < 2**63 else None
 
 
 def files_to_upload(
-    files_df: DataFrame,
-    checkpoints_df: DataFrame,
+    entries,
+    checkpoint: dict,
     timeline_type: str = ACTIVE,
     strategy: str = "BLOCK_ON_INCOMPLETE_COMMIT",
     apply_last_modified_filter: bool = False,
-) -> DataFrame:
-    """getFilesToUploadBasedOnPreviousCheckpoint (:796-838) as one columnar
-    filter over (files ⋈broadcast checkpoints).
+) -> list[tuple]:
+    """getFilesToUploadBasedOnPreviousCheckpoint (:796-838) for one table.
 
-    Emits a `sort_key` column; ordering/batching happens downstream (the
-    batcher re-sorts per table). hoodie.properties prepending for
-    batch_id==0 is represented by KEEPING the properties row when
-    batch_id==0 (the batcher pins it first via its sort rule).
+    ``entries`` is the table's timeline listing, a list of (filename,
+    last_modified, is_directory, size) tuples. Returns the
+    (filename, last_modified) pairs to upload in upload order: active by
+    filename, archived by the numeric token. When the checkpoint is at
+    batch 0 and the listing is not empty, hoodie.properties leads with
+    EPOCH last_modified, exactly like HOODIE_PROPERTIES_FILE_OBJ
+    (MetadataExtractorConstants.java:71-77); the archived listing never
+    holds it, so it is synthesized rather than taken from the listing.
 
     apply_last_modified_filter defaults to False: both reference call
-    sites (:190, :485) pass false — incrementality comes from startAfter
-    listing pushdown + the already-uploaded commit-id compare.
+    sites (:190, :485) pass false; incrementality comes from the
+    startAfter listing pushdown plus the already-uploaded compare.
     """
-    ckpt = checkpoints_df.select(
-        "table_id",
-        F.col("batch_id").alias("_ckpt_batch_id"),
-        F.col("checkpoint_ts").alias("_ckpt_ts"),
-        F.col("last_uploaded_file").alias("_last_uploaded"),
-    )
-    df = files_df.join(F.broadcast(ckpt), "table_id", "left")
-    fn = F.col("filename")
+    batch_id = checkpoint.get("batch_id") or 0
+    ckpt_ts = checkpoint.get("checkpoint_ts")
+    last = checkpoint.get("last_uploaded_file") or ""
+    key = commit_id if timeline_type == ACTIVE else archived_number
+    # already-uploaded filter (:850-874); CONTINUE never skips active
+    # files by commit id (:856-861)
+    done = None
+    if batch_id != 0 and is_instant_file(last) and (timeline_type == ARCHIVED or strategy != CONTINUE):
+        done = key(last)
 
-    keep = (
-        (~F.col("is_directory"))
-        & is_instant_file(fn)
-        & (fn != F.lit(HOODIE_PROPERTIES_FILE))
-        & (F.trim(fn) != "")
-    )
-    if apply_last_modified_filter:
-        keep = keep & (
-            F.col("_ckpt_ts").isNull() | (F.col("last_modified") >= F.col("_ckpt_ts"))
-        )
-
-    # already-uploaded filter (:850-874)
-    has_ckpt_file = (
-        F.col("_ckpt_batch_id").isNotNull()
-        & (F.col("_ckpt_batch_id") != 0)
-        & F.coalesce(
-            F.col("_last_uploaded").rlike(full_match(ACTIVE_COMMIT_INSTANT_PATTERN))
-            | F.col("_last_uploaded").rlike(full_match(ARCHIVED_COMMIT_INSTANT_PATTERN))
-            | F.col("_last_uploaded").rlike(full_match(ARCHIVED_COMMIT_INSTANT_PATTERN_V2)),
-            F.lit(False),
-        )
-    )
+    out = []
+    for name, lm, is_dir, _size in entries:
+        if is_dir or name == HOODIE_PROPERTIES_FILE or not name.strip() or not is_instant_file(name):
+            continue
+        if apply_last_modified_filter and ckpt_ts is not None and (lm is None or lm < ckpt_ts):
+            continue
+        if done is not None and (k := key(name)) is not None and k <= done:
+            continue
+        out.append((name, lm))
+    if batch_id == 0 and entries:
+        out.append((HOODIE_PROPERTIES_FILE, EPOCH))
     if timeline_type == ACTIVE:
-        if strategy != CONTINUE:
-            already = has_ckpt_file & (
-                commit_id_col(fn) <= commit_id_col(F.col("_last_uploaded"))
-            )
-            keep = keep & ~F.coalesce(already, F.lit(False))
-        # CONTINUE mode never skips by commit id (:856-861)
-        sort_key = fn
-    else:
-        already = has_ckpt_file & (
-            archived_numeric_col(fn) <= archived_numeric_col(F.col("_last_uploaded"))
-        )
-        keep = keep & ~F.coalesce(already, F.lit(False))
-        sort_key = archived_numeric_col(fn)
+        return sorted(out, key=lambda f: _sort_key(f[0]))
+    return sorted(out, key=_archived_order)
 
-    # batch_id==0 => synthesize the hoodie.properties row with EPOCH
-    # last_modified, exactly like HOODIE_PROPERTIES_FILE_OBJ
-    # (MetadataExtractorConstants.java:71-77) — the archived dir listing
-    # never contains it, so it cannot come from files_df
-    tables_in_scope = files_df.select("table_id").distinct()
-    props = (
-        tables_in_scope.join(F.broadcast(ckpt), "table_id", "left")
-        .filter(F.coalesce(F.col("_ckpt_batch_id"), F.lit(0)) == 0)
-        .select(
-            "table_id",
-            F.lit(timeline_type).alias("timeline"),
-            F.lit(HOODIE_PROPERTIES_FILE).alias("filename"),
-            F.to_timestamp(F.lit("1970-01-01 00:00:00")).alias("last_modified"),
-            F.lit(False).alias("is_directory"),
-            F.lit(0).cast("long").alias("size"),
-            F.col("_ckpt_batch_id"),
-            F.col("_ckpt_ts"),
-            F.col("_last_uploaded"),
-        )
-    )
-    kept = df.filter(keep).unionByName(props.select(*df.columns))
-    return kept.withColumn("sort_key", sort_key).drop(
-        "_ckpt_batch_id", "_ckpt_ts", "_last_uploaded"
-    )
+
+def _archived_order(file: tuple) -> tuple:
+    """Numeric order, names without a token first (hoodie.properties
+    leading them); the name breaks ties."""
+    n = archived_number(file[0])
+    return (n is not None, n or 0, file[0] != HOODIE_PROPERTIES_FILE, file[0])
 
 
 def last_uploaded_file_from_batch(batch: list[str], timeline_type: str = ACTIVE) -> str:

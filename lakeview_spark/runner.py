@@ -1,17 +1,21 @@
 """End-to-end extractor pipeline (SURVEY §3).
 
 run_once(config): discover -> read properties -> initialize new tables ->
-per table: archived timeline first, then active (TableMetadataUploaderService.java:393-442)
--> filter -> sort -> batch -> mirror -> checkpoint upsert.
+upload. Per table the upload is one sequential chain, in the reference's
+order (TableMetadataUploaderService.java:393-442): the V2 manifest diff,
+the V1-style archived timeline (once ever), then the active timeline,
+each step listing -> filter -> sort -> batch -> mirror -> checkpoint.
 
-The reference iterates tables in batches of 20 on a thread pool; here the
-per-file work is data-parallel: listings fan out as Spark jobs, the
-batcher runs per-table inside applyInPandas, and the mirror sink is a
-foreachPartition writer. Per-table sequential ordering (batches strictly
-ordered, archived before active) is preserved inside each table's group.
-The per-table control state (the table list, checkpoints, manifest
-versions) stays in plain Python on the driver: one row per table is
-cheaper to hold than a Spark job is to launch.
+The reference runs tables in batches of 20 on a thread pool; here the
+whole upload phase is one Spark job, one task per group of about eight
+tables (parallelism across tables = Spark tasks, order within a table
+kept inside its task, SURVEY.md:240). A table's metadata is KBs, so a
+Spark job per phase cost more in scheduling than the work it did. The
+per-table control state (the table list, checkpoints, manifest
+versions) stays in plain Python on the driver: one checkpoint snapshot
+goes out with the tasks and one upsert writes back what they return.
+A failed table keeps the progress of its finished steps and does not
+stop the others; the round then raises, naming it.
 
 CONTINUOUS mode (§3.2) wraps run_once in a driver loop — same dataflow,
 trigger semantics of a 30 min discovery / 5 min upload cadence.
@@ -19,9 +23,12 @@ trigger semantics of a 30 min discovery / 5 min upload cadence.
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import shutil
 import time
+import traceback
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,11 +39,15 @@ from lakeview_spark.constants import (
     HISTORY_FOLDER_NAME,
     HOODIE_FOLDER_NAME,
     HOODIE_PROPERTIES_FILE,
-    INITIAL_CHECKPOINT,
+    MANIFEST_FILE_PREFIX,
     TIMELINE_FOLDER_NAME,
     TIMELINE_LAYOUT_VERSION_V2,
+    VERSION_MARKER_FILE,
 )
-from lakeview_spark.operators.batcher import batch_instants
+# batch_instants is the DataFrame twin of the per-table active step
+# (active_batch_packing and the streaming twin use it); it stays a
+# runner name so runner-level tracing can wrap it
+from lakeview_spark.operators.batcher import batch_instants, create_batches  # noqa: F401
 from lakeview_spark.operators.checkpoints import CheckpointStore
 from lakeview_spark.operators.uploader import (
     ACTIVE,
@@ -44,8 +55,9 @@ from lakeview_spark.operators.uploader import (
     files_to_upload,
     last_uploaded_file_from_batch,
 )
-from lakeview_spark.sources.listing import Lister, discover_tables, list_dir_local
+from lakeview_spark.sources.listing import FileEntry, Lister, discover_tables, list_dir_local
 from lakeview_spark.sources.properties import read_hoodie_properties
+
 
 def timeline_dir(table_uri: str, layout_version: int, timeline_type: str) -> str:
     """Timeline folder per layout (TimelineCommitInstantsUploader.java:922-936)."""
@@ -57,29 +69,10 @@ def timeline_dir(table_uri: str, layout_version: int, timeline_type: str) -> str
 
 
 def list_timeline_files(
-    spark: SparkSession, tables: list[dict], timeline_type: str, lister: Lister = list_dir_local
-) -> DataFrame:
-    """Distributed listing of every table's timeline dir -> files DF."""
-    sc = spark.sparkContext
-
-    def probe(t, _lister=lister, _tt=timeline_type):
-        d = timeline_dir(t["table_uri"], t["timeline_layout_version"], _tt)
-        return [
-            (t["table_id"], _tt, name, lm, is_dir, size)
-            for name, lm, is_dir, size in _lister(d)
-        ]
-
-    if not tables:
-        return spark.createDataFrame(
-            [], "table_id string, timeline string, filename string, "
-            "last_modified timestamp, is_directory boolean, size long"
-        )
-    rdd = sc.parallelize(tables, max(1, min(256, (len(tables) + 7) // 8))).flatMap(probe)
-    return spark.createDataFrame(
-        rdd,
-        "table_id string, timeline string, filename string, "
-        "last_modified timestamp, is_directory boolean, size long",
-    )
+    table: dict, timeline_type: str, lister: Lister = list_dir_local
+) -> list[FileEntry]:
+    """One table's timeline listing."""
+    return lister(timeline_dir(table["table_uri"], table["timeline_layout_version"], timeline_type))
 
 
 def compute_checkpoint_updates(
@@ -187,90 +180,145 @@ def compute_checkpoint_updates(
 
 
 def process_archived_v2(
-    spark: SparkSession,
-    tables: list[dict],
-    store: CheckpointStore,
-    mirror_dir: str | None = None,
-) -> dict:
-    """V2 (LSM) archived timeline: manifest-version-driven incremental
-    mirror (TimelineCommitInstantsUploader.java:267-318).
+    table: dict, checkpoint: dict, mirror_dir: str | None = None
+) -> tuple[dict, int] | None:
+    """One table's V2 (LSM) archived timeline: manifest-version-driven
+    incremental mirror (TimelineCommitInstantsUploader.java:267-318).
 
-    Per table: read `_version_`; if it advanced past the checkpoint's
-    last_archived_manifest_version, upload the manifest-listed parquet
-    files that the previously-processed manifest did not list (anti
-    join on fileName), then record the new version. Manifest files are
-    tiny (KBs), so one distributed parallelize probe reads every table's
-    `_version_`, current manifest and previous manifest and returns the
-    new files; the checkpoints are one driver snapshot.
+    Reads `_version_`; if it advanced past the checkpoint's
+    last_archived_manifest_version, mirrors the manifest-listed parquet
+    files that the previously processed manifest did not list (J4), and
+    returns the checkpoint at the new version with the number of files
+    mirrored. Returns None when nothing is new, and when `_version_` or
+    the manifest cannot be read: the reference logs and continues
+    (TableDiscoveryService exceptionally -> emptySet pattern).
     """
-    v2_tables = [t for t in tables if t.get("timeline_layout_version") == 2]
-    if not v2_tables:
-        return {"v2_tables": 0}
-    ckpts = store.snapshot()
+    d = timeline_dir(table["table_uri"], TIMELINE_LAYOUT_VERSION_V2, ARCHIVED)
+    prev = (
+        checkpoint["last_archived_manifest_version"]
+        if checkpoint["archived_commits_processed"]
+        else None
+    )
 
-    def processed_version(table_id):
-        """The manifest version already mirrored, None if none was."""
-        ck = ckpts.get(table_id)
-        return ck["last_archived_manifest_version"] if ck and ck["archived_commits_processed"] else None
+    def manifest_files(version):
+        with open(os.path.join(d, f"{MANIFEST_FILE_PREFIX}{version}")) as f:
+            return [x["fileName"] for x in json.load(f).get("files", [])]
 
-    def probe(item):
-        import json as _json
-        import os as _os
-
-        t, prev = item
-        d = timeline_dir(t["table_uri"], 2, ARCHIVED)
-
-        def manifest_files(version):
-            with open(_os.path.join(d, f"manifest_{version}")) as f:
-                return [x["fileName"] for x in _json.load(f).get("files", [])]
-
-        # per-table failures (corrupt _version_/manifest) are skipped, not
-        # fatal — reference logs and continues (TableDiscoveryService
-        # exceptionally -> emptySet pattern)
+    try:
+        vf = os.path.join(d, VERSION_MARKER_FILE)
+        if not os.path.exists(vf):
+            return None
+        with open(vf) as f:
+            version = int(f.read().strip())
+        if prev is not None and version <= prev:
+            return None  # nothing new since the mirrored manifest
+        files = []
+        if os.path.exists(os.path.join(d, f"{MANIFEST_FILE_PREFIX}{version}")):
+            files = manifest_files(version)
+    except (ValueError, OSError, KeyError):
+        return None
+    prev_files: set = set()
+    if prev:
         try:
-            vf = _os.path.join(d, "_version_")
-            if not _os.path.exists(vf):
-                return []
-            with open(vf) as f:
-                version = int(f.read().strip())
-            if prev is not None and version <= prev:
-                return []  # nothing new since the mirrored manifest
-            files = []
-            if _os.path.exists(_os.path.join(d, f"manifest_{version}")):
-                files = manifest_files(version)
+            prev_files = set(manifest_files(prev))
         except (ValueError, OSError, KeyError):
-            return []
-        prev_files: set = set()
-        if prev:
-            try:
-                prev_files = set(manifest_files(prev))
-            except (ValueError, OSError, KeyError):
-                pass  # unreadable previous manifest: upload everything listed
-        return [(t["table_id"], version, [f for f in files if f not in prev_files])]  # J4
+            pass  # unreadable previous manifest: upload everything listed
+    new_files = [f for f in files if f not in prev_files]
+    if mirror_dir:
+        for fn in new_files:
+            _mirror(os.path.join(d, fn), mirror_dir, table["table_id"], ARCHIVED, fn)
+    updated = {**checkpoint, "archived_commits_processed": True, "last_archived_manifest_version": version}
+    return updated, len(new_files)
 
-    items = [(t, processed_version(t["table_id"])) for t in v2_tables]
-    sc = spark.sparkContext
-    results = sc.parallelize(items, max(1, min(len(items), 256))).flatMap(probe).collect()
 
-    uploaded = 0
-    updates = []
-    tables_by_id = {x["table_id"]: x for x in v2_tables}
-    for table_id, version, new_files in results:
-        if mirror_dir and new_files:
-            t = tables_by_id[table_id]
-            d = timeline_dir(t["table_uri"], 2, ARCHIVED)
-            for fn in new_files:
-                dest = os.path.join(mirror_dir, table_id, "archived", fn)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                shutil.copyfile(os.path.join(d, fn), dest)
-        uploaded += len(new_files)
-        base = ckpts.get(table_id) or {"table_id": table_id, **INITIAL_CHECKPOINT}
-        updates.append(
-            {**base, "archived_commits_processed": True, "last_archived_manifest_version": version}
+def batch_timeline(
+    entries: list[FileEntry], checkpoint: dict, timeline_type: str, config: EngineConfig
+) -> tuple[list[list[str]], dict | None]:
+    """One table's timeline step before the copies: files_to_upload,
+    then commit-group batching (active) or uniform packing of the
+    single-file archived instants. Returns the ordered batches and the
+    checkpoint after the last one, or ([], None) when nothing batches.
+
+    The checkpoint follows compute_checkpoint_updates: batch_id advances
+    by the number of batches (archived batches number from 1), the
+    savepoint/rollback lookback picks last_uploaded_file, and
+    checkpoint_ts is that file's listed last_modified (None when the
+    listing does not hold it, as for a synthesized hoodie.properties).
+    """
+    candidates = files_to_upload(entries, checkpoint, timeline_type, config.upload_strategy)
+    if timeline_type == ACTIVE:
+        base = checkpoint["batch_id"]
+        first_incomplete, batches = create_batches(
+            candidates,
+            config.active_batch_size,
+            config.upload_strategy,
+            checkpoint["checkpoint_ts"],
+            checkpoint["first_incomplete_commit_file"] or "",
         )
-    if updates:
-        store.upsert(updates)
-    return {"v2_tables": len(v2_tables), "v2_files_uploaded": uploaded}
+    else:
+        base, first_incomplete, size = 0, "", config.archived_batch_size
+        names = [fn for fn, _ in candidates]
+        batches = [names[i : i + size] for i in range(0, len(names), size)]
+    if not batches:
+        return [], None
+    last = last_uploaded_file_from_batch(batches[-1], timeline_type)
+    mtimes = {name: lm for name, lm, _, _ in entries}
+    return batches, {
+        **checkpoint,
+        "batch_id": base + len(batches),
+        "checkpoint_ts": mtimes.get(last),
+        "last_uploaded_file": last,
+        "first_incomplete_commit_file": first_incomplete,
+        "archived_commits_processed": checkpoint["archived_commits_processed"]
+        or timeline_type == ARCHIVED,
+    }
+
+
+def _mirror(src: str, mirror_dir: str, table_id: str, timeline_type: str, name: str) -> None:
+    dest = os.path.join(mirror_dir, table_id, timeline_type, name)
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    shutil.copyfile(src, dest)
+
+
+def upload_table(
+    item: tuple[dict, dict], config: EngineConfig, mirror_dir: str | None, lister: Lister
+) -> dict:
+    """Upload one table, strictly in order: the V2 manifest diff, the
+    V1-style archived timeline if not yet processed (README.md:423-427),
+    then the active timeline, each step starting from the checkpoint the
+    previous one produced. Runs inside a Spark task.
+
+    Returns one row: the checkpoint after the last step that succeeded,
+    the per-step counts, and the traceback of a failure (steps after a
+    failed one do not run, as in the reference's per-table future
+    chain)."""
+    table, checkpoint = item
+    out = {"table_id": table["table_id"], "checkpoint": checkpoint, "error": None, "v2_files": 0}
+    for tt in (ARCHIVED, ACTIVE):
+        out[f"{tt}_listed"] = out[f"{tt}_batched"] = 0
+    try:
+        if table["timeline_layout_version"] == TIMELINE_LAYOUT_VERSION_V2:
+            v2 = process_archived_v2(table, checkpoint, mirror_dir)
+            if v2:
+                out["checkpoint"], out["v2_files"] = v2
+        for tt in (ARCHIVED, ACTIVE):  # archived strictly first (§2.9)
+            if tt == ARCHIVED and out["checkpoint"]["archived_commits_processed"]:
+                continue
+            entries = list_timeline_files(table, tt, lister)
+            out[f"{tt}_listed"] = len(entries)
+            batches, updated = batch_timeline(entries, out["checkpoint"], tt, config)
+            if mirror_dir:
+                src_dir = timeline_dir(table["table_uri"], table["timeline_layout_version"], tt)
+                props = f"{table['table_uri'].rstrip('/')}/{HOODIE_FOLDER_NAME}/{HOODIE_PROPERTIES_FILE}"
+                for name in (n for batch in batches for n in batch):
+                    src = props if name == HOODIE_PROPERTIES_FILE else os.path.join(src_dir, name)
+                    _mirror(src, mirror_dir, table["table_id"], tt, name)
+            out[f"{tt}_batched"] = sum(map(len, batches))
+            if updated:
+                out["checkpoint"] = updated
+    except Exception:  # noqa: BLE001 — one table's failure is its own
+        out["error"] = traceback.format_exc()
+    return out
 
 
 def discover_round(
@@ -324,7 +372,13 @@ def upload_round(
     """Upload phase of one extractor round, over an already-discovered
     table snapshot (uploadInstantsInTables,
     TableMetadataUploaderService.java). Separated from discovery so
-    CONTINUOUS mode can run the two on independent cadences."""
+    CONTINUOUS mode can run the two on independent cadences.
+
+    One Spark job runs upload_table for every table; the checkpoints go
+    out as one snapshot and come back as one upsert of the changed rows.
+    If any table failed, the round raises after that upsert, so the
+    tables that succeeded (and the finished steps of those that did not)
+    keep their progress."""
     metrics: dict = {}
     store = CheckpointStore(spark, os.path.join(state_dir, "checkpoints"))
     metrics["tables_initialized"] = store.initialize_tables(t["table_id"] for t in tables)
@@ -335,88 +389,34 @@ def upload_round(
     # (TableMetadataUploaderService.java:159-167) — the run continues for
     # the healthy tables
     healthy = [t for t in tables if not t["failure_reason"]]
+    ckpts = store.snapshot()
+    results = []
+    if healthy:
+        items = [(t, ckpts[t["table_id"]]) for t in healthy]
+        task = functools.partial(upload_table, config=config, mirror_dir=mirror_dir, lister=lister)
+        n_slices = max(1, min(256, (len(items) + 7) // 8))
+        results = spark.sparkContext.parallelize(items, n_slices).map(task).collect()
+    changed = [r["checkpoint"] for r in results if r["checkpoint"] != ckpts[r["table_id"]]]
+    if changed:
+        store.upsert(changed)
 
-    # V2 (LSM) archived timelines go through the manifest-diff path
-    metrics.update(process_archived_v2(spark, healthy, store, mirror_dir))
-
-    for timeline_type in (ARCHIVED, ACTIVE):  # archived strictly first (§2.9)
-        scope = healthy
-        if timeline_type == ARCHIVED:
-            # archived timeline is processed once ever (README.md:423-427):
-            # skip tables whose checkpoint says archived_commits_processed
-            done = {k for k, ck in store.snapshot().items() if ck["archived_commits_processed"]}
-            scope = [t for t in healthy if t["table_id"] not in done]
-        if not scope:
-            metrics[f"{timeline_type}_files"] = 0
-            continue
-        # the listing runs once, in this count: batching, the mirror and
-        # the checkpoint join all read the cached files
-        files_df = list_timeline_files(spark, scope, timeline_type, lister).cache()
-        if files_df.count() == 0:
-            metrics[f"{timeline_type}_files"] = 0
-            files_df.unpersist()
-            continue
-        ckpts = store.load()
-        candidates = files_to_upload(
-            files_df, ckpts, timeline_type, config.upload_strategy
-        )
-        if timeline_type == ACTIVE:
-            batches = batch_instants(
-                candidates, config.active_batch_size, config.upload_strategy, ckpts
-            )
+    v2_tables = sum(t["timeline_layout_version"] == TIMELINE_LAYOUT_VERSION_V2 for t in healthy)
+    metrics["v2_tables"] = v2_tables
+    if v2_tables:
+        metrics["v2_files_uploaded"] = sum(r["v2_files"] for r in results)
+    for tt in (ARCHIVED, ACTIVE):
+        # a timeline whose listings are all empty reports `{tt}_files: 0`
+        if sum(r[f"{tt}_listed"] for r in results):
+            metrics[f"{tt}_batched_files"] = sum(r[f"{tt}_batched"] for r in results)
         else:
-            # archived files are single-file groups: uniform packing
-            from pyspark.sql.window import Window
+            metrics[f"{tt}_files"] = 0
 
-            w = Window.partitionBy("table_id").orderBy("sort_key")
-            batches = (
-                candidates.withColumn(
-                    "batch_id",
-                    F.floor((F.row_number().over(w) - 1) / config.archived_batch_size).cast("int") + 1,
-                )
-                .withColumn(
-                    "seq_in_batch",
-                    ((F.row_number().over(w) - 1) % config.archived_batch_size).cast("int"),
-                )
-                .withColumn("first_incomplete", F.lit(""))
-                .select("table_id", "batch_id", "seq_in_batch", "filename", "first_incomplete")
-            )
-        batches = batches.cache()
-        n = batches.count()
-        metrics[f"{timeline_type}_batched_files"] = n
-        if n == 0:
-            batches.unpersist()
-            files_df.unpersist()
-            continue
-
-        if mirror_dir:
-            uri_by_id = {t["table_id"]: t for t in tables}
-            layout = {
-                t["table_id"]: t["timeline_layout_version"] for t in tables
-            }
-
-            def mirror(rows, _tt=timeline_type):
-                import shutil as _sh
-
-                for row in rows:
-                    t = uri_by_id[row.table_id]
-                    src_dir = timeline_dir(t["table_uri"], layout[row.table_id], _tt)
-                    if row.filename == HOODIE_PROPERTIES_FILE:
-                        src = f"{t['table_uri'].rstrip('/')}/{HOODIE_FOLDER_NAME}/{HOODIE_PROPERTIES_FILE}"
-                    else:
-                        src = os.path.join(src_dir, row.filename)
-                    dest = os.path.join(mirror_dir, row.table_id, _tt, row.filename)
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    _sh.copyfile(src, dest)
-
-            batches.foreachPartition(mirror)
-
-        # ckpts loaded above is still current (no upsert since)
-        updates = compute_checkpoint_updates(batches, files_df, ckpts, timeline_type)
-        store.upsert(updates)
-        batches.unpersist()
-        files_df.unpersist()
-
+    failed = [r for r in results if r["error"]]
+    if failed:
+        raise RuntimeError(
+            f"upload failed for {len(failed)} table(s) "
+            f"{sorted(r['table_id'] for r in failed)}; first error:\n{failed[0]['error']}"
+        )
     return metrics
 
 

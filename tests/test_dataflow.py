@@ -26,9 +26,10 @@ from lakeview_spark.sources.properties import read_hoodie_properties
 
 # Most tests here are in the slow tier (deselected by the default
 # "-m not slow" addopts; the close battery runs the full suite with
-# -m "slow or not slow"). The three V1 run_once rounds (end to end,
-# incremental, mirror failure) stay in the fast tier: they gate the
-# extractor round itself.
+# -m "slow or not slow"). The fast tier keeps what gates the extractor
+# round itself: the three V1 run_once rounds (end to end, incremental,
+# mirror failure), discovery, the upload filter rules and the CONTINUE
+# reference scenario.
 slow = pytest.mark.slow
 
 
@@ -84,7 +85,6 @@ PARSER_CFG = lambda root: [  # noqa: E731
 ]
 
 
-@slow
 def test_discovery_finds_tables_and_prunes(spark, lake):
     tables = discover_tables(
         spark, PARSER_CFG(lake), exclusion_patterns=[r".*excluded.*"]
@@ -96,7 +96,6 @@ def test_discovery_finds_tables_and_prunes(spark, lake):
     assert r["lake"] == "lake1" and r["database"] == "db1"
 
 
-@slow
 def test_discovery_table_id_override(spark, lake):
     cfg = [
         {
@@ -108,7 +107,6 @@ def test_discovery_table_id_override(spark, lake):
     assert len(rows) == 1 and rows[0]["table_id"] == "my-pinned-id"
 
 
-@slow
 def test_discovery_override_requires_exactly_one(spark, lake):
     cfg = [
         {
@@ -274,92 +272,70 @@ def test_checkpoint_store_roundtrip(spark, tmp_path):
     assert got["t2"].batch_id == 0  # untouched
 
 
-@slow
-def test_files_to_upload_filters(spark):
+def _ckpt(batch_id, checkpoint_ts, last_uploaded_file):
+    return {
+        "table_id": "t1",
+        "batch_id": batch_id,
+        "checkpoint_ts": checkpoint_ts,
+        "last_uploaded_file": last_uploaded_file,
+        "first_incomplete_commit_file": "",
+        "archived_commits_processed": False,
+        "last_archived_manifest_version": 0,
+    }
+
+
+def _names(candidates):
+    return [fn for fn, _ in candidates]
+
+
+def test_files_to_upload_filters():
     t = datetime(2026, 1, 10)
     old = datetime(2025, 1, 1)
-    files = spark.createDataFrame(
-        [
-            ("t1", "active", "100.commit", t, False, 1),
-            ("t1", "active", "150.commit", old, False, 1),  # older than ckpt_ts
-            ("t1", "active", "200.commit", t, False, 1),
-            ("t1", "active", "somedir", t, True, 0),  # directory
-            ("t1", "active", "hoodie.properties", t, False, 1),  # excluded (re-added when batch 0)
-            ("t1", "active", "not-an-instant.txt", t, False, 1),
-            ("t1", "active", "", t, False, 1),  # blank
-        ],
-        "table_id string, timeline string, filename string, last_modified timestamp, "
-        "is_directory boolean, size long",
+    entries = [
+        ("100.commit", t, False, 1),
+        ("150.commit", old, False, 1),  # older than ckpt_ts
+        ("200.commit", t, False, 1),
+        ("somedir", t, True, 0),  # directory
+        ("hoodie.properties", t, False, 1),  # excluded (re-added when batch 0)
+        ("not-an-instant.txt", t, False, 1),
+        ("", t, False, 1),  # blank
+    ]
+    ckpt = _ckpt(2, datetime(2026, 1, 1), "150.commit")
+    got = set(
+        _names(
+            files_to_upload(
+                entries, ckpt, ACTIVE, "BLOCK_ON_INCOMPLETE_COMMIT", apply_last_modified_filter=True
+            )
+        )
     )
-    ckpts = spark.createDataFrame(
-        [("t1", 2, datetime(2026, 1, 1), "150.commit", "", False, 0)],
-        "table_id string, batch_id int, checkpoint_ts timestamp, last_uploaded_file string, "
-        "first_incomplete_commit_file string, archived_commits_processed boolean, "
-        "last_archived_manifest_version int",
-    )
-    got = {
-        r.filename
-        for r in files_to_upload(
-            files, ckpts, ACTIVE, "BLOCK_ON_INCOMPLETE_COMMIT", apply_last_modified_filter=True
-        ).collect()
-    }
     # 100 <= 150 (already uploaded), 150 older than watermark, dir/properties/garbage/blank dropped
     assert got == {"200.commit"}
 
     # batch_id = 0 -> properties row is kept (prepended downstream)
-    ckpts0 = spark.createDataFrame(
-        [("t1", 0, datetime(1970, 1, 1), "", "", False, 0)], ckpts.schema
-    )
-    got0 = {r.filename for r in files_to_upload(files, ckpts0, ACTIVE, "BLOCK_ON_INCOMPLETE_COMMIT").collect()}
+    ckpt0 = _ckpt(0, datetime(1970, 1, 1), "")
+    got0 = set(_names(files_to_upload(entries, ckpt0, ACTIVE, "BLOCK_ON_INCOMPLETE_COMMIT")))
     assert "hoodie.properties" in got0 and "200.commit" in got0 and "100.commit" in got0
 
 
-@slow
-def test_files_to_upload_continue_never_skips_by_commit_id(spark):
+def test_files_to_upload_continue_never_skips_by_commit_id():
     t = datetime(2026, 1, 10)
-    files = spark.createDataFrame(
-        [("t1", "active", "100.commit", t, False, 1)],
-        "table_id string, timeline string, filename string, last_modified timestamp, "
-        "is_directory boolean, size long",
-    )
-    ckpts = spark.createDataFrame(
-        [("t1", 2, datetime(2026, 1, 1), "150.commit", "", False, 0)],
-        "table_id string, batch_id int, checkpoint_ts timestamp, last_uploaded_file string, "
-        "first_incomplete_commit_file string, archived_commits_processed boolean, "
-        "last_archived_manifest_version int",
-    )
-    got = {
-        r.filename
-        for r in files_to_upload(files, ckpts, ACTIVE, "CONTINUE_ON_INCOMPLETE_COMMIT").collect()
-    }
+    entries = [("100.commit", t, False, 1)]
+    ckpt = _ckpt(2, datetime(2026, 1, 1), "150.commit")
+    got = set(_names(files_to_upload(entries, ckpt, ACTIVE, "CONTINUE_ON_INCOMPLETE_COMMIT")))
     assert got == {"100.commit"}  # :856-861
 
 
-@slow
-def test_archived_numeric_ordering_and_skip(spark):
+def test_archived_numeric_ordering_and_skip():
     t = datetime(2026, 1, 10)
-    files = spark.createDataFrame(
-        [
-            ("t1", "archived", ".commits_.archive.10_1-0-1", t, False, 1),
-            ("t1", "archived", ".commits_.archive.2_1-0-1", t, False, 1),
-            ("t1", "archived", ".commits_.archive.3_1-0-1", t, False, 1),
-        ],
-        "table_id string, timeline string, filename string, last_modified timestamp, "
-        "is_directory boolean, size long",
-    )
-    ckpts = spark.createDataFrame(
-        [("t1", 1, datetime(2026, 1, 1), ".commits_.archive.2_1-0-1", "", False, 0)],
-        "table_id string, batch_id int, checkpoint_ts timestamp, last_uploaded_file string, "
-        "first_incomplete_commit_file string, archived_commits_processed boolean, "
-        "last_archived_manifest_version int",
-    )
-    rows = (
-        files_to_upload(files, ckpts, ARCHIVED, "BLOCK_ON_INCOMPLETE_COMMIT")
-        .orderBy("sort_key")
-        .collect()
-    )
+    entries = [
+        (".commits_.archive.10_1-0-1", t, False, 1),
+        (".commits_.archive.2_1-0-1", t, False, 1),
+        (".commits_.archive.3_1-0-1", t, False, 1),
+    ]
+    ckpt = _ckpt(1, datetime(2026, 1, 1), ".commits_.archive.2_1-0-1")
+    got = _names(files_to_upload(entries, ckpt, ARCHIVED, "BLOCK_ON_INCOMPLETE_COMMIT"))
     # numeric sort: 3 < 10 (lexicographic would say '10' < '3'); 2 skipped
-    assert [r.filename for r in rows] == [
+    assert got == [
         ".commits_.archive.3_1-0-1",
         ".commits_.archive.10_1-0-1",
     ]
@@ -497,8 +473,9 @@ def test_run_once_mirror_failure_does_not_advance_checkpoint(spark, lake, tmp_pa
     with open(os.path.join(mirror, t1), "w") as f:
         f.write("not a directory")
 
-    with pytest.raises(Exception):
+    with pytest.raises(Exception) as failure:
         run_once(spark, cfg, state, mirror)
+    assert t1 in str(failure.value)  # the round names the failed table
 
     store = CheckpointStore(spark, os.path.join(state, "checkpoints"))
     ckpts = {r.table_id: r for r in store.load().collect()}
@@ -506,6 +483,10 @@ def test_run_once_mirror_failure_does_not_advance_checkpoint(spark, lake, tmp_pa
     assert ckpts[t1].batch_id == 0
     assert ckpts[t1].last_uploaded_file == ""
     assert not ckpts[t1].archived_commits_processed
+    # the failure is tbl1's alone: tbl2 uploaded and advanced in the same run
+    t2 = uuid3_from_uri(f"{lake}/nested/tbl2")
+    assert ckpts[t2].batch_id == 1
+    assert ckpts[t2].last_uploaded_file == "300.commit"
 
     # unblock and re-run: the same files are reprocessed successfully
     os.remove(os.path.join(mirror, t1))
@@ -567,7 +548,6 @@ def test_run_once_incremental_second_run_uploads_only_new_commits(spark, lake, t
         assert f.read() == "x"
 
 
-@slow
 def test_continue_strategy_checkpoint_sequence_reference_scenario(spark):
     """Port of ContinueOnIncompleteCommitStrategyTest.java:102-256: the
     mixed timeline (111 complete, 222 stale-incomplete, 333 clean, 444/

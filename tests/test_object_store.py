@@ -680,7 +680,7 @@ def test_azure_discovery_end_to_end(spark):
     assert {r["database"] for r in tables} == {"db1"}
 
 
-def test_azure_timeline_paging_and_checkpoint_resume(spark):
+def test_azure_timeline_paging_and_checkpoint_resume():
     """A timeline page through the Azure client: the 7-entry .hoodie
     dir drains across 4 continuation-token pages (page_size=2, the
     mid-timeline token case of AzureAsyncStorageClientTest.java);
@@ -719,22 +719,15 @@ def test_azure_timeline_paging_and_checkpoint_resume(spark):
     assert fs.get_paths_calls == ["warehouse/db1/t1/.hoodie"] * 4
 
     # the caller-side checkpoint compare carries resume instead
-    files = spark.createDataFrame(
-        [("t1", "active", name, mt, is_dir, size)
-         for name, mt, is_dir, size in entries],
-        "table_id string, timeline string, filename string, "
-        "last_modified timestamp, is_directory boolean, size long",
-    )
-    ckpts = spark.createDataFrame(
-        [("t1", 2, datetime(2026, 1, 1), "100.commit", "", False, 0)],
-        "table_id string, batch_id int, checkpoint_ts timestamp, "
-        "last_uploaded_file string, first_incomplete_commit_file string, "
-        "archived_commits_processed boolean, last_archived_manifest_version int",
-    )
+    ckpt = {
+        **ckpt,
+        "table_id": "t1",
+        "batch_id": 2,
+        "checkpoint_ts": datetime(2026, 1, 1),
+        "archived_commits_processed": False,
+        "last_archived_manifest_version": 0,
+    }
     got = {
-        r.filename
-        for r in files_to_upload(
-            files, ckpts, "active", "BLOCK_ON_INCOMPLETE_COMMIT"
-        ).collect()
+        fn for fn, _ in files_to_upload(entries, ckpt, "active", "BLOCK_ON_INCOMPLETE_COMMIT")
     }
     assert got == {"200.commit", "200.commit.requested", "200.inflight"}
