@@ -4,12 +4,14 @@ Mirrors the reference's launch surface — cli_parser/CliParser.java:19-63
 (mutually exclusive ``-p``/``--path`` and ``-c``/``--config``, plus
 ``-h``/``--help``) and Main.java:45-69 (parse args -> load config ->
 run the job). Mode routing follows ``jobRunMode``: ONCE -> run_once,
-CONTINUOUS -> run_continuous (with per-round config re-read from the
-original source, the ConfigRefresher equivalent) or, with
-``--dual-cadence``, run_continuous_dual (the reference's two
-independent discovery/upload schedules, TableDiscoveryAndUploadJob
-.java:66-82), ONCE_WITH_RETRY -> run_once_with_retry. The run's
-metrics print as one JSON line.
+CONTINUOUS -> run_continuous (the reference's discovery and upload-poll
+schedules, TableDiscoveryAndUploadJob.java:66-82, with the config
+re-merged from the original source every 2 min, the ConfigRefresher
+equivalent), ONCE_WITH_RETRY -> run_once_with_retry. The CONTINUOUS
+cadences come from the config keys tableDiscoveryIntervalMinutes,
+processTableMetadataSyncDurationSeconds and
+tableMetadataUploadIntervalMinutes. The run's metrics print as one
+JSON line.
 """
 
 from __future__ import annotations
@@ -34,27 +36,12 @@ def build_parser() -> argparse.ArgumentParser:
     )
     ap.add_argument("--mirror-dir", default=None, help="mirror sink root (optional)")
     ap.add_argument(
-        "--interval",
-        type=float,
-        default=300.0,
-        help="CONTINUOUS mode: seconds between rounds",
-    )
-    ap.add_argument(
         "--max-rounds",
         type=int,
         default=None,
-        help="CONTINUOUS mode: stop after N rounds (default: run forever)",
-    )
-    ap.add_argument(
-        "--dual-cadence",
-        action="store_true",
         help=(
-            "CONTINUOUS mode: run discovery and the upload poll on the "
-            "reference's two independent schedules "
-            "(tableDiscoveryIntervalMinutes / "
-            "processTableMetadataSyncDurationSeconds gated to "
-            "tableMetadataUploadIntervalMinutes) instead of one fused "
-            "round per --interval; --max-rounds bounds emitted events"
+            "CONTINUOUS mode: stop after N events (discoveries and upload "
+            "polls; default: run until shutdown)"
         ),
     )
     ap.add_argument("--master", default=None, help="Spark master override")
@@ -123,24 +110,13 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if isinstance(round_metrics, dict):
             observe_run_metrics(registry, round_metrics)
 
-    if config.job_run_mode == "CONTINUOUS" and args.dual_cadence:
-        out = runner.run_continuous_dual(
-            spark,
-            config,
-            args.state_dir,
-            args.mirror_dir,
-            max_events=args.max_rounds if args.max_rounds is not None else 20,
-            base_config_source=source,
-            on_event=_observe,
-        )
-    elif config.job_run_mode == "CONTINUOUS":
+    if config.job_run_mode == "CONTINUOUS":
         out = runner.run_continuous(
             spark,
             config,
             args.state_dir,
             args.mirror_dir,
-            interval_s=args.interval,
-            max_rounds=args.max_rounds,
+            max_events=args.max_rounds,
             base_config_source=source,
             on_event=_observe,
         )

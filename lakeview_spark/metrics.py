@@ -164,10 +164,9 @@ def observe_run_metrics(registry: MetricsRegistry, run_metrics: dict) -> None:
         if key.endswith("_batched_files") and value:
             registry.increment(METADATA_UPLOAD_SUCCESS_COUNTER, by=value)
     if run_metrics.get("config_refresh_failures"):
-        registry.increment(
-            FAILED_OVERRIDE_CONFIG_COUNTER,
-            by=run_metrics["config_refresh_failures"],
-        )
+        # a running total: the counter takes the latest, not the sum
+        key = registry._key(FAILED_OVERRIDE_CONFIG_COUNTER, None)
+        registry.counters[key] = run_metrics["config_refresh_failures"]
 
 
 class MetricsServer:

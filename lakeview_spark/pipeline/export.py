@@ -98,7 +98,7 @@ def write_webdataset(
     key inside the tar so byte output is reproducible run-to-run.
     `out_dir` must be executor-visible (local dir on local[*], a fuse/
     NFS mount or staging-then-upload on a cluster — the same contract
-    as any foreachPartition sink, cf. sinks.py mirror_sink)."""
+    as the extractor's mirror_dir, cf. runner.py upload_table)."""
     n_rows = df.count()
     n_shards = max(1, -(-n_rows // samples_per_shard))
     os.makedirs(out_dir, exist_ok=True)

@@ -1,49 +1,17 @@
-"""Sinks (SURVEY §2.1 S6/S7).
+"""Upload sink (SURVEY §2.1 S7).
 
 The reference's sink is presigned-URL HTTP PUTs in per-batch groups with
-retry/backoff (PresignedUrlFileUploader.java:38-119). Our generic sink is
-a pluggable ``foreachPartition`` writer; the default implementation
-mirrors timeline files into a local directory tree (the test/local
-equivalent of the Onehouse backend), and parquet/json writers cover the
-analytical outputs.
-
-Executor-side, per-partition, with bounded retry — no driver collect.
+retry/backoff (PresignedUrlFileUploader.java:38-119). This module keeps
+that single-file PUT with the reference's semantics, behind an injected
+transport. The extractor itself mirrors timeline files into a local
+directory from inside its upload task (runner.py upload_table).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from typing import Callable, Iterable
-
-from pyspark.sql import DataFrame
-
-
-def mirror_sink(dest_root: str, max_retries: int = 3, base_backoff_s: float = 0.1) -> Callable:
-    """foreachPartition writer copying (table_id, src_path, rel_path) rows.
-
-    Retry with exponential backoff mirrors AsyncHttpClientWithRetry
-    (:124-129: 3 retries, exp backoff); swap the `copy` body for an HTTP
-    PUT to target a real backend.
-    """
-
-    def write_partition(rows: Iterable) -> None:
-        for row in rows:
-            dest = os.path.join(dest_root, row.table_id, row.rel_path)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            attempt = 0
-            while True:
-                try:
-                    shutil.copyfile(row.src_path, dest)
-                    break
-                except OSError:
-                    attempt += 1
-                    if attempt > max_retries:
-                        raise
-                    time.sleep(base_backoff_s * (2 ** (attempt - 1)))
-
-    return write_partition
 
 
 DEFAULT_UPLOAD_CHUNK_BYTES = 5 * 1024 * 1024  # reference stream batch size
@@ -106,28 +74,3 @@ def upload_file_to_presigned_url(
             if attempt > max_retries:
                 raise
             sleep(base_backoff_s * (2 ** (attempt - 1)))
-
-
-def presigned_upload_sink(
-    put: Callable,
-    url_for_row: Callable,
-    chunk_bytes: int = DEFAULT_UPLOAD_CHUNK_BYTES,
-) -> Callable:
-    """foreachPartition sink PUTting (table_id, src_path, ...) rows to
-    their presigned URLs — the production twin of mirror_sink; the
-    upload runs executor-side per partition, never through the driver."""
-
-    def write_partition(rows: Iterable) -> None:
-        for row in rows:
-            upload_file_to_presigned_url(
-                put, url_for_row(row), row.src_path, chunk_bytes=chunk_bytes
-            )
-
-    return write_partition
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)

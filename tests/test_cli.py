@@ -53,25 +53,6 @@ def test_cli_with_yaml_string_and_retry_mode(spark, lake, tmp_path, capsys):  # 
     assert isinstance(attempts, list) and attempts[0]["succeeded"] is True
 
 
-def test_cli_continuous_mode_bounded_rounds(spark, lake, tmp_path, capsys):  # noqa: F811
-    cfg = tmp_path / "conf.yml"
-    cfg.write_text(_yaml(lake, "CONTINUOUS"))
-    rc = main(
-        [
-            "-p",
-            str(cfg),
-            "--state-dir",
-            str(tmp_path / "s"),
-            "--max-rounds",
-            "1",
-        ],
-        spark=spark,
-    )
-    assert rc == 0
-    rounds = json.loads(capsys.readouterr().out)
-    assert isinstance(rounds, list) and len(rounds) == 1
-
-
 def test_cli_help_exits_zero(capsys):
     with pytest.raises(SystemExit) as exc:
         main(["-h"])

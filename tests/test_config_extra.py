@@ -158,84 +158,87 @@ def test_once_with_retry_stops_when_next_cron_imminent():
     assert len(attempts) == 1  # no retry: scheduled run covers it
 
 
+BLOCK = "BLOCK_ON_INCOMPLETE_COMMIT"
+CONTINUE = "CONTINUE_ON_INCOMPLETE_COMMIT"
+
+
+def _continuous_base(**cadence):
+    """A CONTINUOUS config dict. By default the upload poll fires every
+    120 s and every poll uploads (2-min gate), so with the default 2-min
+    refresh clock each upload runs right after one refresh."""
+    mec = {
+        "jobRunMode": "CONTINUOUS",
+        "tableDiscoveryIntervalMinutes": 60,
+        "processTableMetadataSyncDurationSeconds": 120,
+        "tableMetadataUploadIntervalMinutes": 2,
+        "parserConfig": [
+            {"lake": "l", "databases": [{"name": "d", "basePaths": ["/x"]}]}
+        ],
+    }
+    mec.update(cadence)
+    return {"version": "V1", "metadataExtractorConfig": mec}
+
+
+def _stub_rounds(monkeypatch, upload):
+    """Replace both phases: discovery finds one table, and every upload
+    round calls ``upload(config)``, whose dict (if any) is its metrics."""
+    monkeypatch.setattr(
+        runner_mod,
+        "discover_round",
+        lambda spark, config, lister: ([{"table_id": "a"}], {"tables_discovered": 1}),
+    )
+    monkeypatch.setattr(
+        runner_mod,
+        "upload_round",
+        lambda spark, config, tables, state_dir, mirror_dir, lister: upload(config) or {},
+    )
+
+
+def _override_text(strategy: str) -> str:
+    return f"metadataExtractorConfig:\n  uploadStrategy: {strategy}\n"
+
+
 def test_continuous_mode_refreshes_override_each_round(monkeypatch, tmp_path):
     seen_strategies = []
-
-    def fake_run_once(spark, config, state_dir, mirror_dir, lister):
-        seen_strategies.append(config.upload_strategy)
-        return {"ok": True}
-
-    monkeypatch.setattr(runner_mod, "run_once", fake_run_once)
-
-    base = {
-        "version": "V1",
-        "metadataExtractorConfig": {
-            "jobRunMode": "CONTINUOUS",
-            "parserConfig": [
-                {"lake": "l", "databases": [{"name": "d", "basePaths": ["/x"]}]}
-            ],
-        },
-    }
+    _stub_rounds(monkeypatch, lambda config: seen_strategies.append(config.upload_strategy))
     override = tmp_path / "override.yaml"
-    override.write_text("metadataExtractorConfig:\n  uploadStrategy: BLOCK_ON_INCOMPLETE_COMMIT\n")
+    override.write_text(_override_text(BLOCK))
 
-    def flip_override(_interval):
-        # between rounds the operator edits the override file
-        override.write_text(
-            "metadataExtractorConfig:\n  uploadStrategy: CONTINUE_ON_INCOMPLETE_COMMIT\n"
-        )
+    def flip_override(_seconds):
+        # between upload rounds the operator edits the override file
+        override.write_text(_override_text(CONTINUE))
 
-    rounds = run_continuous(
+    # no config object: the loop loads it from the source before its
+    # first event
+    events = run_continuous(
         None,
         None,
         "/tmp/unused",
-        max_rounds=2,
-        interval_s=0,
-        base_config_source=base,
+        max_events=3,
+        base_config_source=_continuous_base(),
         override_source=str(override),
         sleep_fn=flip_override,
     )
-    assert len(rounds) == 2
-    assert seen_strategies == [
-        "BLOCK_ON_INCOMPLETE_COMMIT",
-        "CONTINUE_ON_INCOMPLETE_COMMIT",
-    ]
+    assert [e["kind"] for e in events] == ["discovery", "upload_poll", "upload_poll"]
+    assert seen_strategies == [BLOCK, CONTINUE]
 
 
-def test_continuous_mode_keeps_last_good_config_on_bad_override(monkeypatch, tmp_path):
+def test_continuous_mode_keeps_last_good_config_on_bad_override(monkeypatch):
     seen = []
-
-    def fake_run_once(spark, config, state_dir, mirror_dir, lister):
-        seen.append(config.upload_strategy)
-        return {}
-
-    monkeypatch.setattr(runner_mod, "run_once", fake_run_once)
-    base = {
-        "version": "V1",
-        "metadataExtractorConfig": {
-            "jobRunMode": "CONTINUOUS",
-            "parserConfig": [
-                {"lake": "l", "databases": [{"name": "d", "basePaths": ["/x"]}]}
-            ],
-        },
-    }
-    good = load_config(base)
-
-    def corrupt(_):
-        pass
-
-    rounds = run_continuous(
+    _stub_rounds(monkeypatch, lambda config: seen.append(config.upload_strategy))
+    base = _continuous_base()
+    events = run_continuous(
         None,
-        good,
+        load_config(base),
         "/tmp/unused",
-        max_rounds=2,
-        interval_s=0,
+        max_events=3,
         base_config_source=base,
-        override_source="metadataExtractorConfig:\n  uploadStrategy: NOT_A_STRATEGY\n",
-        sleep_fn=corrupt,
+        override_source=_override_text("NOT_A_STRATEGY"),
+        sleep_fn=lambda s: None,
     )
-    # invalid override -> refresh fails -> previous config stays in force
-    assert len(rounds) == 2 and seen == ["BLOCK_ON_INCOMPLETE_COMMIT"] * 2
+    # invalid override -> every refresh fails -> previous config stays
+    assert len(events) == 3 and seen == [BLOCK] * 2
+    assert events[-1]["config_refresh_failures"] == 2
 
 
 def test_load_config_from_yaml_string():
@@ -270,115 +273,85 @@ def test_load_config_invalid_yaml_raises():
 def test_continuous_mode_survives_failing_rounds_and_counts_them(monkeypatch):
     calls = []
 
-    def flaky_run_once(spark, config, state_dir, mirror_dir, lister):
+    def flaky_upload(config):
         calls.append(1)
         if len(calls) == 1:
             raise RuntimeError("sink exploded")
-        return {"tables_discovered": 2}
+        return {"tables_initialized": 2}
 
-    monkeypatch.setattr(runner_mod, "run_once", flaky_run_once)
-    cfg = load_config(
-        {
-            "version": "V1",
-            "metadataExtractorConfig": {
-                "jobRunMode": "CONTINUOUS",
-                "parserConfig": [
-                    {"lake": "l", "databases": [{"name": "d", "basePaths": ["/x"]}]}
-                ],
-            },
-        }
+    _stub_rounds(monkeypatch, flaky_upload)
+    events = run_continuous(
+        None,
+        load_config(_continuous_base()),
+        "/tmp/unused",
+        max_events=3,
+        sleep_fn=lambda s: None,
     )
-    rounds = run_continuous(None, cfg, "/tmp/unused", max_rounds=2, interval_s=0)
-    # round 1 failed but was recorded; round 2 ran anyway
-    assert [r["succeeded"] for r in rounds] == [False, True]
-    assert "sink exploded" in rounds[0]["error"]
-    assert rounds[1]["tables_discovered"] == 2
+    uploads = [e for e in events if e["kind"] == "upload_poll"]
+    # upload round 1 failed but was recorded; round 2 ran on schedule
+    assert [e["succeeded"] for e in uploads] == [False, True]
+    assert "sink exploded" in uploads[0]["error"]
+    assert uploads[1]["tables_initialized"] == 2
+    assert [e["t"] for e in uploads] == [0.0, 120.0]
 
 
 def test_continuous_mode_counts_config_refresh_failures(monkeypatch):
-    monkeypatch.setattr(
-        runner_mod, "run_once", lambda *a: {"tables_discovered": 0}
-    )
-    cfg = load_config(
-        {
-            "version": "V1",
-            "metadataExtractorConfig": {
-                "jobRunMode": "CONTINUOUS",
-                "parserConfig": [
-                    {"lake": "l", "databases": [{"name": "d", "basePaths": ["/x"]}]}
-                ],
-            },
-        }
-    )
-    rounds = run_continuous(
+    _stub_rounds(monkeypatch, lambda config: None)
+    events = run_continuous(
         None,
-        cfg,
+        load_config(_continuous_base()),
         "/tmp/unused",
-        max_rounds=2,
-        interval_s=0,
+        max_events=3,
+        sleep_fn=lambda s: None,
         base_config_source={"version": "V1"},  # invalid: no parserConfig
     )
     # every refresh fails, the last good config stays in force, and the
-    # failure count is visible in each round's metrics
-    assert [r["config_refresh_failures"] for r in rounds] == [1, 2]
-    assert [r["config_refresh_attempts"] for r in rounds] == [1, 2]
-    assert all(r["succeeded"] for r in rounds)
+    # failure count is visible in each event's metrics
+    assert [e["config_refresh_failures"] for e in events] == [1, 1, 2]
+    assert [e["config_refresh_attempts"] for e in events] == [1, 1, 2]
+    assert all(e["succeeded"] for e in events)
 
 
 def test_refresh_counters_are_per_attempt_not_per_round(monkeypatch):
-    """The refresh clock is independent of the round clock: a 300 s
-    round at the default 100 s refresh cadence holds THREE refresh
-    slices, each one attempt. The counters' unit is the attempt —
-    attempts gives the denominator, so the failure rate is readable
-    (r5 ADVICE: a per-round reading of the failure count inflates)."""
-    monkeypatch.setattr(
-        runner_mod, "run_once", lambda *a: {"tables_discovered": 0}
-    )
-    cfg = load_config(
-        {
-            "version": "V1",
-            "metadataExtractorConfig": {
-                "jobRunMode": "CONTINUOUS",
-                "parserConfig": [
-                    {"lake": "l", "databases": [{"name": "d", "basePaths": ["/x"]}]}
-                ],
-            },
-        }
-    )
-    rounds = run_continuous(
+    """The refresh clock is independent of the upload clock: 300 s
+    between uploads at a 100 s refresh cadence hold THREE refreshes,
+    each one attempt. The counters' unit is the attempt, so attempts
+    give the denominator of the failure rate (r5 ADVICE: a per-round
+    reading of the failure count inflates)."""
+    _stub_rounds(monkeypatch, lambda config: None)
+    cadence = {
+        "processTableMetadataSyncDurationSeconds": 300,
+        "tableMetadataUploadIntervalMinutes": 5,
+    }
+    events = run_continuous(
         None,
-        cfg,
+        load_config(_continuous_base(**cadence)),
         "/tmp/unused",
-        max_rounds=2,
-        interval_s=300,
+        max_events=3,
         refresh_interval_s=100,
         sleep_fn=lambda s: None,
         base_config_source={"version": "V1"},  # invalid: no parserConfig
     )
-    # initial merge = attempt 1 (before round 1); the inter-round sleep
-    # is 3 slices of 100 s = attempts 2-4 (before round 2). Every
+    # initial merge = attempt 1 (before the t=0 events); refreshes at
+    # t=100, 200, 300 = attempts 2-4 (before the t=300 upload). Every
     # attempt fails here, so failures == attempts.
-    assert [r["config_refresh_attempts"] for r in rounds] == [1, 4]
-    assert [r["config_refresh_failures"] for r in rounds] == [1, 4]
-    assert all(r["succeeded"] for r in rounds)
+    assert [e["t"] for e in events] == [0.0, 0.0, 300.0]
+    assert [e["config_refresh_attempts"] for e in events] == [1, 1, 4]
+    assert [e["config_refresh_failures"] for e in events] == [1, 1, 4]
+    assert all(e["succeeded"] for e in events)
 
 
 def test_continuous_mode_refreshes_override_on_its_own_2min_clock(
     monkeypatch, tmp_path
 ):
     """ConfigRefresher.java:17,39-52: the override is re-merged every 2
-    minutes on its own timer, independent of the (longer) round
-    interval. With interval_s=300 and the default refresh_interval_s=120
-    the inter-round sleep must be sliced [120, 120, 60] with a refresh
-    after each slice, so an edit at virtual t=10 s is in force by
-    t=120 s — within one refresh period, not one round period."""
+    minutes on its own timer, independent of the (longer) upload
+    interval. At the reference's 30 s poll and 5 min upload gate the
+    refreshes land at t=120 and t=240, so an edit made in the first
+    poll interval is in force by t=120 and the t=300 upload runs with
+    it."""
     seen_strategies = []
-
-    def fake_run_once(spark, config, state_dir, mirror_dir, lister):
-        seen_strategies.append(config.upload_strategy)
-        return {}
-
-    monkeypatch.setattr(runner_mod, "run_once", fake_run_once)
+    _stub_rounds(monkeypatch, lambda config: seen_strategies.append(config.upload_strategy))
 
     from lakeview_spark import config as runner_mod_config
 
@@ -393,49 +366,35 @@ def test_continuous_mode_refreshes_override_on_its_own_2min_clock(
         runner_mod_config, "load_config_with_override", counting_loader
     )
 
-    base = {
-        "version": "V1",
-        "metadataExtractorConfig": {
-            "jobRunMode": "CONTINUOUS",
-            "parserConfig": [
-                {"lake": "l", "databases": [{"name": "d", "basePaths": ["/x"]}]}
-            ],
-        },
-    }
     override = tmp_path / "override.yaml"
-    override.write_text(
-        "metadataExtractorConfig:\n  uploadStrategy: BLOCK_ON_INCOMPLETE_COMMIT\n"
-    )
+    override.write_text(_override_text(BLOCK))
 
     sleeps = []
 
     def virtual_sleep(seconds):
         sleeps.append(seconds)
         if len(sleeps) == 1:
-            # the operator edits the override 10 "seconds" into the
-            # first slice (the slice's sleep models that whole span)
-            override.write_text(
-                "metadataExtractorConfig:\n"
-                "  uploadStrategy: CONTINUE_ON_INCOMPLETE_COMMIT\n"
-            )
+            # the operator edits the override during the first poll
+            # interval (t=0..30)
+            override.write_text(_override_text(CONTINUE))
 
-    rounds = run_continuous(
+    cadence = {
+        "processTableMetadataSyncDurationSeconds": 30,
+        "tableMetadataUploadIntervalMinutes": 5,
+    }
+    # discovery@0, then polls every 30 s up to the t=300 upload
+    events = run_continuous(
         None,
         None,
         "/tmp/unused",
-        max_rounds=2,
-        interval_s=300,
-        base_config_source=base,
+        max_events=12,
+        base_config_source=_continuous_base(**cadence),
         override_source=str(override),
         sleep_fn=virtual_sleep,
     )
-    assert len(rounds) == 2
-    # the inter-round gap was sliced on the refresh cadence
-    assert sleeps == [120, 120, 60]
-    # initial load at t=0, then one refresh per slice end
-    assert refresh_times == [0, 120, 240, 300]
-    # the edit landed mid-interval and round 2 ran with it in force
-    assert seen_strategies == [
-        "BLOCK_ON_INCOMPLETE_COMMIT",
-        "CONTINUE_ON_INCOMPLETE_COMMIT",
-    ]
+    uploads = [e for e in events if e.get("uploaded")]
+    assert [e["t"] for e in uploads] == [0.0, 300.0]
+    # initial load at t=0, then one refresh per 2-min tick
+    assert refresh_times == [0, 120, 240]
+    # the edit landed mid-interval and the t=300 upload ran with it
+    assert seen_strategies == [BLOCK, CONTINUE]

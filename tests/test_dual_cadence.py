@@ -1,4 +1,4 @@
-"""CONTINUOUS dual-cadence scheduler (VERDICT r08 next-5).
+"""CONTINUOUS scheduler: the reference's two cadences (VERDICT r08 next-5).
 
 The reference runs discovery and upload as TWO independent schedules
 sharing a `tablesToProcess` snapshot under a lock
@@ -6,10 +6,13 @@ sharing a `tablesToProcess` snapshot under a lock
 tableDiscoveryIntervalMinutes (30 min), the upload poll every
 processTableMetadataSyncDurationSeconds (30 s) gated to
 tableMetadataUploadIntervalMinutes (5 min) since the previous upload
-run START. `run_continuous_dual` is the driver-loop twin over virtual
+run START. `run_continuous` is the driver-loop twin over virtual
 time; these tests drive the two clocks and assert the straddle:
 two discovery rounds bracket N>2 upload rounds, with the table set
 held stable between discoveries.
+
+The monkeypatched scheduler tests need no Spark and run in the fast
+tier; the end-to-end lake and CLI tests are slow.
 """
 
 from __future__ import annotations
@@ -18,17 +21,14 @@ import os
 
 import lakeview_spark.runner as runner_mod
 from lakeview_spark.config import load_config
-from lakeview_spark.runner import run_continuous_dual
+from lakeview_spark.runner import run_continuous
 from tests.test_dataflow import lake, make_table  # noqa: F401 (fixture)
 import pytest
 
 # slow tier (deselected by the default "-m not slow" addopts; the
 # builder's close battery runs the full suite with -m "slow or not
-# slow"): end-to-end / property-simulation coverage that exceeds the
-# round driver's pytest budget — correctness gating lives in
-# test_oracle_parity + the hygiene/golden suites, which stay fast
-pytestmark = pytest.mark.slow
-
+# slow"): only the tests that start Spark
+slow = pytest.mark.slow
 
 
 def _cfg(root, **intervals):
@@ -62,7 +62,7 @@ def test_dual_cadence_schedule_reference_defaults(monkeypatch):
     cfg = _cfg("/x")  # defaults: 30 min / 30 s / 5 min
     slept = []
     # enough events for: disc@0, 60 polls (t=0..1770), disc@1800, poll@1800
-    events = run_continuous_dual(
+    events = run_continuous(
         None, cfg, "/tmp/unused", max_events=64, sleep_fn=slept.append
     )
 
@@ -111,7 +111,7 @@ def test_dual_cadence_failed_discovery_keeps_last_snapshot(monkeypatch):
         processTableMetadataSyncDurationSeconds=30,
         tableMetadataUploadIntervalMinutes=0.5,
     )
-    events = run_continuous_dual(
+    events = run_continuous(
         None, cfg, "/tmp/unused", max_events=10, sleep_fn=lambda s: None
     )
     disc = [e for e in events if e["kind"] == "discovery"]
@@ -127,6 +127,7 @@ def test_dual_cadence_failed_discovery_keeps_last_snapshot(monkeypatch):
     )
 
 
+@slow
 def test_dual_cadence_end_to_end_sees_new_table_only_after_discovery(
     spark, lake, tmp_path
 ):
@@ -147,7 +148,7 @@ def test_dual_cadence_end_to_end_sees_new_table_only_after_discovery(
         make_table(lake, "tbl_new", files=["500.commit.requested", "500.commit"])
 
     # events: disc@0, upload@0, upload@30..., disc@120, upload@120...
-    events = run_continuous_dual(
+    events = run_continuous(
         spark, cfg, state, max_events=9, sleep_fn=grow_lake
     )
     disc = [e for e in events if e["kind"] == "discovery"]
@@ -165,10 +166,11 @@ def test_dual_cadence_end_to_end_sees_new_table_only_after_discovery(
     assert os.path.isdir(os.path.join(state, "checkpoints"))
 
 
+@slow
 def test_cli_dual_cadence_bounded_events(spark, lake, tmp_path, capsys):
-    """--dual-cadence routes CONTINUOUS to the two-schedule loop; the
-    first discovery and the first (immediately-gated-open) upload poll
-    both fire at t=0, so --max-rounds 2 completes without sleeping."""
+    """CONTINUOUS routes to the two-schedule loop; the first discovery
+    and the first (immediately-gated-open) upload poll both fire at
+    t=0, so --max-rounds bounds the emitted events without sleeping."""
     from lakeview_spark.__main__ import main
 
     cfg = tmp_path / "conf.yml"
@@ -182,27 +184,66 @@ def test_cli_dual_cadence_bounded_events(spark, lake, tmp_path, capsys):
         "        - name: d\n"
         f"          basePaths: [{lake}]\n"
     )
-    rc = main(
-        [
-            "-p",
-            str(cfg),
-            "--state-dir",
-            str(tmp_path / "s"),
-            "--max-rounds",
-            "2",
-            "--dual-cadence",
-        ],
-        spark=spark,
-    )
-    assert rc == 0
     import json as _json
 
-    events = _json.loads(capsys.readouterr().out)
+    def run(max_rounds):
+        argv = ["-p", str(cfg), "--state-dir", str(tmp_path / "s")]
+        assert main(argv + ["--max-rounds", str(max_rounds)], spark=spark) == 0
+        return _json.loads(capsys.readouterr().out)
+
+    assert [e["kind"] for e in run(1)] == ["discovery"]
+    events = run(2)
     assert [e["kind"] for e in events] == ["discovery", "upload_poll"]
     assert events[0]["t"] == 0.0 and events[1]["t"] == 0.0
     assert events[1]["uploaded"] is True
     # the CLI passes the config source, so refresh counters ride along
     assert events[0]["config_refresh_attempts"] >= 1
+
+
+def test_cli_has_one_continuous_mode():
+    """CONTINUOUS has no CLI cadence switches: the cadences come from
+    the config."""
+    from lakeview_spark.__main__ import build_parser
+
+    for removed in (["--interval", "5"], ["--dual-cadence"]):
+        with pytest.raises(SystemExit) as exc:
+            build_parser().parse_args(["-c", "version: V1"] + removed)
+        assert exc.value.code == 2
+
+
+def test_unbounded_by_default(monkeypatch):
+    """max_events=None runs until shutdown, as the reference does: the
+    loop is still polling after 25 events."""
+    monkeypatch.setattr(
+        runner_mod,
+        "discover_round",
+        lambda spark, config, lister: ([{"table_id": "a"}], {"tables_discovered": 1}),
+    )
+    monkeypatch.setattr(
+        runner_mod,
+        "upload_round",
+        lambda spark, config, tables, state_dir, mirror_dir, lister: {},
+    )
+
+    class Shutdown(Exception):
+        pass
+
+    seen = []
+
+    def sleep(_seconds):
+        if len(seen) >= 25:
+            raise Shutdown
+
+    with pytest.raises(Shutdown):
+        run_continuous(
+            None,
+            _cfg("/x"),
+            "/tmp/unused",
+            max_events=None,
+            sleep_fn=sleep,
+            on_event=seen.append,
+        )
+    assert len(seen) == 25
 
 
 def test_dual_cadence_refresh_clock_flips_override(monkeypatch, tmp_path):
@@ -245,7 +286,7 @@ def test_dual_cadence_refresh_clock_flips_override(monkeypatch, tmp_path):
 
     # refresh every 90 s; polls at t=0 (BLOCK) and t=120 (after the
     # t=90 refresh saw the flip -> CONTINUE)
-    events = run_continuous_dual(
+    events = run_continuous(
         None,
         load_config(base),
         "/tmp/unused",

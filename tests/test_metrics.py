@@ -83,17 +83,25 @@ def test_discovery_failure_carries_discover_reason_tag():
     assert 'metadata_discover_failure_reason="UNKNOWN"' in body
 
 
-def test_continuous_runner_observes_each_round_live(tmp_path, spark):
-    """run_continuous's on_event feeds the registry as rounds complete —
-    the registry must be non-empty after round 1 of N, not only at exit
-    (r10 ADVICE: the reference updates gauges inside each round)."""
+def test_continuous_runner_observes_each_round_live(monkeypatch):
+    """run_continuous's on_event feeds the registry as events are
+    emitted — the registry must show the discovery gauge after the
+    first event, not only at exit (r10 ADVICE: the reference updates
+    gauges inside each round)."""
     from lakeview_spark import runner
     from lakeview_spark.config import load_config
 
-    lake = tmp_path / "lake"
-    (lake / "db" / "t1" / ".hoodie").mkdir(parents=True)
-    (lake / "db" / "t1" / ".hoodie" / "hoodie.properties").write_text(
-        "hoodie.table.name=t1\nhoodie.table.type=COPY_ON_WRITE\n"
+    monkeypatch.setattr(
+        runner,
+        "discover_round",
+        lambda spark, config, lister: ([{"table_id": "t1"}], {"tables_discovered": 1}),
+    )
+    monkeypatch.setattr(
+        runner,
+        "upload_round",
+        lambda spark, config, tables, state_dir, mirror_dir, lister: {
+            "tables_initialized": len(tables)
+        },
     )
     cfg = load_config(
         {
@@ -101,34 +109,36 @@ def test_continuous_runner_observes_each_round_live(tmp_path, spark):
             "metadataExtractorConfig": {
                 "jobRunMode": "CONTINUOUS",
                 "parserConfig": [
-                    {
-                        "lake": "lake",
-                        "databases": [
-                            {"name": "db", "basePaths": [str(lake / "db" / "t1")]}
-                        ],
-                    }
+                    {"lake": "lake", "databases": [{"name": "db", "basePaths": ["/x"]}]}
                 ],
             },
         }
     )
     reg = MetricsRegistry()
-    seen_per_round = []
+    seen_per_event = []
 
     def on_event(metrics):
         observe_run_metrics(reg, metrics)
-        seen_per_round.append(TABLES_DISCOVERED_GAUGE in reg.render())
+        body = reg.render()
+        seen_per_event.append(
+            (TABLES_DISCOVERED_GAUGE in body, TABLES_PROCESSED_GAUGE in body)
+        )
 
     runner.run_continuous(
-        spark,
-        cfg,
-        str(tmp_path / "state"),
-        max_rounds=2,
-        interval_s=0.0,
-        sleep_fn=lambda s: None,
-        on_event=on_event,
+        None, cfg, "/tmp/unused", max_events=2, sleep_fn=lambda s: None, on_event=on_event
     )
-    # the gauge was visible after EVERY round, including the first
-    assert seen_per_round == [True, True]
+    # the discovery gauge was visible after the FIRST event (discovery),
+    # the processed gauge after the second (the t=0 upload)
+    assert seen_per_event == [(True, False), (True, True)]
+
+
+def test_failed_override_counter_follows_the_running_total():
+    """config_refresh_failures is cumulative, so three events carrying
+    1, 2, 2 failures mean 2 failed refreshes in all, not 5."""
+    reg = MetricsRegistry()
+    for failures in (1, 2, 2):
+        observe_run_metrics(reg, {"config_refresh_failures": failures})
+    assert f"{FAILED_OVERRIDE_CONFIG_COUNTER} 2" in reg.render()
 
 
 def test_http_endpoint_serves_scrapes_and_disabled_port_is_noop():
