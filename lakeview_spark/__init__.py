@@ -14,7 +14,7 @@ Two layers (see SURVEY.md):
 Everything is declarative DataFrame-first so Catalyst handles pushdown,
 pruning, join strategy and codegen; the only imperative kernels are the
 greedy batch packer (inherently sequential per table, parallel across
-tables via applyInPandas) and the recursive listing BFS driver loop.
+tables via applyInPandas) and the recursive table-discovery walk.
 """
 
 __version__ = "0.1.0"

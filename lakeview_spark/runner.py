@@ -327,39 +327,20 @@ def discover_round(
     config: EngineConfig,
     lister: Lister = list_dir_local,
 ) -> tuple[list[dict], dict]:
-    """Discovery phase of one extractor round: BFS table discovery plus
-    the one distributed hoodie.properties read. Returns the enriched
-    table list (the `tablesToProcess` snapshot of
-    TableDiscoveryAndUploadJob.java:43,150-156) and its metrics."""
-    metrics: dict = {}
+    """Discovery phase of one extractor round: one walk finds the tables
+    and reads their hoodie.properties, then each text is parsed. Returns
+    the enriched table list (the `tablesToProcess` snapshot of
+    TableDiscoveryAndUploadJob.java:43,150-156) and its metrics. An
+    unreadable or corrupt file gives its table a failure_reason
+    (ParsedHudiProperties.java:16-22) instead of failing the run."""
     tables = discover_tables(spark, config.parser_config, config.path_exclusion_patterns, lister)
-    metrics["tables_discovered"] = len(tables)
-
-    # properties: one distributed read over every table's hoodie.properties;
-    # unreadable/corrupt files become sentinel rows with failure_reason
-    # (ParsedHudiProperties.java:16-22) instead of failing the run
-    all_prop_paths = [
-        f"{t['table_uri'].rstrip('/')}/{HOODIE_FOLDER_NAME}/{HOODIE_PROPERTIES_FILE}"
-        for t in tables
-    ]
-    prop_paths = [p for p in all_prop_paths if os.path.exists(p)]
-    missing_paths = [p for p in all_prop_paths if not os.path.exists(p)]
-    props = {
-        r.path: r.asDict()
-        for r in read_hoodie_properties(spark, prop_paths, missing_paths).collect()
-    }
-    metrics["table_metadata_processing_failures"] = sum(
-        1 for p in props.values() if p.get("failure_reason")
-    )
     for t in tables:
-        base = f"{t['table_uri'].rstrip('/')}/{HOODIE_FOLDER_NAME}/{HOODIE_PROPERTIES_FILE}"
-        p = props.get(base) or props.get(f"file:{base}") or props.get(f"file://{base}")
-        t["table_name"] = (p or {}).get("table_name")
-        t["table_type"] = (p or {}).get("table_type")
-        t["table_version"] = (p or {}).get("table_version", 6)
-        t["timeline_layout_version"] = (p or {}).get("timeline_layout_version", 1)
-        t["failure_reason"] = (p or {}).get("failure_reason")
-    return tables, metrics
+        t.update(read_hoodie_properties(t.pop("properties_text")))
+    failed = {t["table_uri"] for t in tables if t["failure_reason"]}
+    return tables, {
+        "tables_discovered": len(tables),
+        "table_metadata_processing_failures": len(failed),
+    }
 
 
 def upload_round(

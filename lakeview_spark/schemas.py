@@ -10,7 +10,6 @@ Fixed StructTypes mirroring the reference's value objects:
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     DecimalType,
     IntegerType,
@@ -86,23 +85,6 @@ BATCHES_SCHEMA = StructType(
         StructField("seq_in_batch", IntegerType()),
         StructField("filename", StringType()),
         StructField("first_incomplete", StringType()),
-    ]
-)
-
-# LSM manifest entry (LSMTimelineManifestReader.java:126-139)
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField(
-            "files",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("fileName", StringType()),
-                        StructField("fileLen", LongType()),
-                    ]
-                )
-            ),
-        )
     ]
 )
 

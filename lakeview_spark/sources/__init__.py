@@ -1,3 +1,2 @@
 from lakeview_spark.sources.listing import list_dir_local, discover_tables  # noqa: F401
 from lakeview_spark.sources.properties import read_hoodie_properties  # noqa: F401
-from lakeview_spark.sources.manifest import read_manifest, read_manifest_version  # noqa: F401

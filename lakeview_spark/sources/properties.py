@@ -1,4 +1,4 @@
-"""hoodie.properties reader (SURVEY §2.1 S4).
+"""hoodie.properties parser (SURVEY §2.1 S4).
 
 Reference: HoodiePropertiesReader.java:37-61 — java.util.Properties over a
 byte stream; keys hoodie.table.{name,type,version} and
@@ -10,23 +10,18 @@ HoodiePropertiesReader.java:62-80): any read/parse error yields a
 sentinel row — tableName="", tableType=MERGE_ON_READ, version defaults —
 carrying a MetadataUploadFailureReasons code instead of failing the run.
 The parse errors the reference can hit are: missing hoodie.table.name
-(Lombok @NonNull), TableType.valueOf on a missing/unknown type, and
-Integer.parseInt on a present-but-non-numeric version — all collapse to
-HOODIE_PROPERTY_NOT_FOUND_OR_CORRUPTED; an unreadable object yields
-NO_SUCH_KEY (MetadataExtractorUtils.java:12-29).
+(Lombok @NonNull; an empty or comment-only file has none), TableType.valueOf
+on a missing/unknown type, and Integer.parseInt on a present-but-non-numeric
+version — all collapse to HOODIE_PROPERTY_NOT_FOUND_OR_CORRUPTED; an
+unreadable object yields NO_SUCH_KEY (MetadataExtractorUtils.java:12-29).
 
-Spark-first: ALL tables' properties files are parsed in one distributed
-job — `spark.read.text` over the full path list, provenance via
-input_file_name(), key=value split, and a first()-per-key pivot. One scan,
-no per-table round trips; at a million tables this is one map stage.
-Corruption checks are columnar WHEN/try_cast guards on the pivoted rows,
-so the failure path costs nothing extra.
+Discovery reads each table's file where it finds the table
+(sources/listing.py); this module only parses the text it returns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import re
 
 from lakeview_spark.constants import (
     HOODIE_TABLE_NAME_KEY,
@@ -37,118 +32,76 @@ from lakeview_spark.constants import (
     TIMELINE_LAYOUT_VERSION_DEFAULT,
 )
 
-_KEYS = {
-    HOODIE_TABLE_NAME_KEY: "table_name",
-    HOODIE_TABLE_TYPE_KEY: "table_type",
-    HOODIE_TABLE_VERSION_KEY: "table_version",
-    HOODIE_TIMELINE_LAYOUT_VERSION_KEY: "timeline_layout_version",
-}
-
 VALID_TABLE_TYPES = ("COPY_ON_WRITE", "MERGE_ON_READ")
 # MetricsConstants.MetadataUploadFailureReasons values this reader can emit
 FAILURE_CORRUPT = "HOODIE_PROPERTY_NOT_FOUND_OR_CORRUPTED"
 FAILURE_NO_SUCH_KEY = "NO_SUCH_KEY"
 
-_SCHEMA = (
-    "path string, table_name string, table_type string, "
-    "table_version int, timeline_layout_version int, failure_reason string"
-)
+# java.util.Properties line rules (Properties.load javadoc): after the
+# leading whitespace, the key runs up to the first '=', ':' or
+# whitespace; whitespace around one '=' or ':' is skipped and the rest
+# is the value. Escapes and continuation lines are not handled: Hudi
+# writes none in the keys read here.
+_LINE = re.compile(r"([^=: \t\f]*)[ \t\f]*[=:]?[ \t\f]*(.*)")
+_INT = re.compile(r"[+-]?[0-9]+")
 
 
-def read_hoodie_properties(
-    spark: SparkSession, paths: list[str], missing_paths: list[str] | None = None
-) -> DataFrame:
-    """Parse hoodie.properties files -> one row per file.
+def _parse_int(value: str | None, default: int) -> int | None:
+    """Integer.parseInt: the default when absent, None when it would throw."""
+    if value is None:
+        return default
+    if not _INT.fullmatch(value) or not -(2**31) <= int(value) < 2**31:
+        return None
+    return int(value)
 
-    Output: path, table_name, table_type, table_version,
-    timeline_layout_version, failure_reason (null on success).
 
-    A row whose content would make the reference's parse throw — no
+def _sentinel(reason: str) -> dict:
+    return {
+        "table_name": "",
+        "table_type": "MERGE_ON_READ",
+        "table_version": HOODIE_TABLE_VERSION_DEFAULT,
+        "timeline_layout_version": TIMELINE_LAYOUT_VERSION_DEFAULT,
+        "failure_reason": reason,
+    }
+
+
+def read_hoodie_properties(text: str | None) -> dict:
+    """Parse one hoodie.properties text (None: the file could not be read)
+    -> table_name, table_type, table_version, timeline_layout_version,
+    failure_reason (None on success).
+
+    Text that would make the reference's parse throw — no
     hoodie.table.name, an unknown hoodie.table.type, or a
     present-but-non-numeric version — becomes the reference's sentinel
     row instead: table_name='', table_type='MERGE_ON_READ', default
     versions, failure_reason=HOODIE_PROPERTY_NOT_FOUND_OR_CORRUPTED
-    (HoodiePropertiesReader.java:62-80). ``missing_paths`` (known
-    unreadable: listed-but-gone or access-denied objects) are emitted as
-    the same sentinel with failure_reason=NO_SUCH_KEY without touching
-    storage.
+    (HoodiePropertiesReader.java:62-80). Unreadable files (listed but
+    gone, access denied) give the same sentinel with
+    failure_reason=NO_SUCH_KEY.
     """
-    missing = list(missing_paths or [])
-    if not paths:
-        parsed = spark.createDataFrame([], _SCHEMA)
-    else:
-        # java.util.Properties accepts '=' OR ':' as the key terminator
-        # and '#' OR '!' as comment leaders (Properties.load javadoc) —
-        # Hudi writes '=', but the reference would read a ':' file fine,
-        # so we must too. First [=:] wins; key/value whitespace-trimmed.
-        lines = (
-            spark.read.text(paths)
-            .withColumn("path", F.input_file_name())
-            .withColumn("stripped", F.ltrim(F.col("value")))
-            .filter(
-                ~F.col("stripped").startswith("#")
-                & ~F.col("stripped").startswith("!")
-                & (F.col("stripped") != "")
-            )
-            .withColumn("key", F.trim(F.regexp_extract("stripped", r"^([^=:]*?)\s*[=:]", 1)))
-            .withColumn("val", F.trim(F.regexp_extract("stripped", r"^[^=:]*?\s*[=:]\s*(.*)$", 1)))
-            .filter(F.col("key") != "")
-        )
-        pivoted = lines.groupBy("path").agg(
-            *[
-                F.first(F.when(F.col("key") == k, F.col("val")), ignorenulls=True).alias(alias)
-                for k, alias in _KEYS.items()
-            ]
-        )
-        # Reference parse-failure conditions (each throws in Java, so any
-        # one poisons the whole row, not just its field):
-        corrupt = (
-            F.col("table_name").isNull()
-            | ~F.col("table_type").isin(*VALID_TABLE_TYPES)
-            | (F.col("table_version").isNotNull() & F.col("table_version").try_cast("int").isNull())
-            | (
-                F.col("timeline_layout_version").isNotNull()
-                & F.col("timeline_layout_version").try_cast("int").isNull()
-            )
-        )
-        parsed = pivoted.select(
-            "path",
-            F.when(corrupt, F.lit("")).otherwise(F.col("table_name")).alias("table_name"),
-            F.when(corrupt, F.lit("MERGE_ON_READ"))
-            .otherwise(F.col("table_type"))
-            .alias("table_type"),
-            F.when(corrupt, F.lit(HOODIE_TABLE_VERSION_DEFAULT))
-            .otherwise(
-                F.coalesce(
-                    F.col("table_version").try_cast("int"),
-                    F.lit(HOODIE_TABLE_VERSION_DEFAULT),
-                )
-            )
-            .alias("table_version"),
-            F.when(corrupt, F.lit(TIMELINE_LAYOUT_VERSION_DEFAULT))
-            .otherwise(
-                F.coalesce(
-                    F.col("timeline_layout_version").try_cast("int"),
-                    F.lit(TIMELINE_LAYOUT_VERSION_DEFAULT),
-                )
-            )
-            .alias("timeline_layout_version"),
-            F.when(corrupt, F.lit(FAILURE_CORRUPT)).alias("failure_reason"),
-        )
-    if not missing:
-        return parsed
-    missing_df = spark.createDataFrame(
-        [
-            (
-                p,
-                "",
-                "MERGE_ON_READ",
-                HOODIE_TABLE_VERSION_DEFAULT,
-                TIMELINE_LAYOUT_VERSION_DEFAULT,
-                FAILURE_NO_SUCH_KEY,
-            )
-            for p in missing
-        ],
-        _SCHEMA,
+    if text is None:
+        return _sentinel(FAILURE_NO_SUCH_KEY)
+    props: dict[str, str] = {}
+    for line in re.split(r"\r\n|\r|\n", text):
+        line = line.lstrip(" \t\f")
+        if not line or line[0] in "#!":
+            continue
+        key, value = _LINE.fullmatch(line).groups()
+        # Properties.load puts every pair, so a repeated key keeps its
+        # last value; trailing whitespace is dropped (Hudi writes none)
+        props[key] = value.rstrip()
+    name = props.get(HOODIE_TABLE_NAME_KEY)
+    table_type = props.get(HOODIE_TABLE_TYPE_KEY)
+    version = _parse_int(props.get(HOODIE_TABLE_VERSION_KEY), HOODIE_TABLE_VERSION_DEFAULT)
+    layout = _parse_int(
+        props.get(HOODIE_TIMELINE_LAYOUT_VERSION_KEY), TIMELINE_LAYOUT_VERSION_DEFAULT
     )
-    return parsed.unionByName(missing_df)
+    if name is None or table_type not in VALID_TABLE_TYPES or None in (version, layout):
+        return _sentinel(FAILURE_CORRUPT)
+    return {
+        "table_name": name,
+        "table_type": table_type,
+        "table_version": version,
+        "timeline_layout_version": layout,
+        "failure_reason": None,
+    }

@@ -5,6 +5,7 @@ and an end-to-end run_once over a local fixture lake."""
 from __future__ import annotations
 
 import os
+import uuid
 from datetime import datetime
 
 import pytest
@@ -19,17 +20,18 @@ from lakeview_spark.operators.uploader import (
     last_uploaded_file_from_batch,
     start_after,
 )
-from lakeview_spark.runner import run_once
+from lakeview_spark.runner import process_archived_v2, run_once
+from lakeview_spark.sources import listing
 from lakeview_spark.sources.listing import discover_tables
-from lakeview_spark.sources.manifest import manifest_diff, read_manifest, read_manifest_version
 from lakeview_spark.sources.properties import read_hoodie_properties
 
 # Most tests here are in the slow tier (deselected by the default
 # "-m not slow" addopts; the close battery runs the full suite with
 # -m "slow or not slow"). The fast tier keeps what gates the extractor
-# round itself: the three V1 run_once rounds (end to end, incremental,
-# mirror failure), discovery, the upload filter rules and the CONTINUE
-# reference scenario.
+# round itself: the V1 run_once rounds (end to end, incremental, mirror
+# failure, degraded properties), discovery, the properties parser, the
+# V2 manifest diff, the upload filter rules and the CONTINUE reference
+# scenario.
 slow = pytest.mark.slow
 
 
@@ -85,15 +87,27 @@ PARSER_CFG = lambda root: [  # noqa: E731
 ]
 
 
-def test_discovery_finds_tables_and_prunes(spark, lake):
-    tables = discover_tables(
-        spark, PARSER_CFG(lake), exclusion_patterns=[r".*excluded.*"]
-    )
-    rows = {r["table_uri"]: r for r in tables}
-    assert set(rows) == {f"{lake}/tbl1", f"{lake}/nested/tbl2"}
-    r = rows[f"{lake}/tbl1"]
-    assert r["table_id"] == uuid3_from_uri(f"{lake}/tbl1")
-    assert r["lake"] == "lake1" and r["database"] == "db1"
+def test_discovery_finds_tables_and_prunes(spark, lake, monkeypatch):
+    """Inside its time budget the driver walks the lake alone; past it,
+    the frontier left over goes to one Spark job. Both find the same rows."""
+    sc = spark.sparkContext
+    for budget_s, walk_jobs in ((float("inf"), 0), (0.0, 1)):
+        monkeypatch.setattr(listing, "_DRIVER_WALK_BUDGET_S", budget_s)
+        group = f"discovery-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "discovery walk")
+        try:
+            tables = discover_tables(
+                spark, PARSER_CFG(lake), exclusion_patterns=[r".*excluded.*"]
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == walk_jobs
+        rows = {r["table_uri"]: r for r in tables}
+        assert set(rows) == {f"{lake}/tbl1", f"{lake}/nested/tbl2"}
+        r = rows[f"{lake}/tbl1"]
+        assert r["table_id"] == uuid3_from_uri(f"{lake}/tbl1")
+        assert r["lake"] == "lake1" and r["database"] == "db1"
+        assert "hoodie.table.name=nested/tbl2" in rows[f"{lake}/nested/tbl2"]["properties_text"]
 
 
 def test_discovery_table_id_override(spark, lake):
@@ -118,83 +132,77 @@ def test_discovery_override_requires_exactly_one(spark, lake):
     assert len(discover_tables(spark, cfg)) == 0
 
 
-@slow
-def test_properties_reader_defaults(spark, tmp_path):
-    p1 = tmp_path / "a.properties"
-    p1.write_text("#c\nhoodie.table.name=t1\nhoodie.table.type=COPY_ON_WRITE\n")
-    p2 = tmp_path / "b.properties"
-    p2.write_text(
+def test_properties_reader_defaults():
+    t1 = read_hoodie_properties("#c\nhoodie.table.name=t1\nhoodie.table.type=COPY_ON_WRITE\n")
+    t2 = read_hoodie_properties(
         "hoodie.table.name=t2\nhoodie.table.type=MERGE_ON_READ\n"
         "hoodie.table.version=8\nhoodie.timeline.layout.version=2\n"
     )
-    df = read_hoodie_properties(spark, [str(p1), str(p2)])
-    rows = {r.table_name: r for r in df.collect()}
-    assert rows["t1"].table_version == 6  # default (MetadataExtractorConstants.java:27)
-    assert rows["t1"].timeline_layout_version == 1
-    assert rows["t2"].table_version == 8
-    assert rows["t2"].timeline_layout_version == 2
-    assert rows["t1"].failure_reason is None and rows["t2"].failure_reason is None
+    assert t1["table_name"] == "t1" and t2["table_name"] == "t2"
+    assert t1["table_version"] == 6  # default (MetadataExtractorConstants.java:27)
+    assert t1["timeline_layout_version"] == 1
+    assert t2["table_version"] == 8
+    assert t2["timeline_layout_version"] == 2
+    assert t1["failure_reason"] is None and t2["failure_reason"] is None
 
 
-@slow
-def test_properties_reader_accepts_colon_separator_and_bang_comments(spark, tmp_path):
+def test_properties_reader_accepts_colon_separator_and_bang_comments():
     """java.util.Properties treats ':' as a separator and '!' as a
-    comment leader (Properties.load javadoc) — a file the reference
-    parses must parse here too."""
-    p = tmp_path / "colon.properties"
-    p.write_text(
+    comment leader, ends a key at whitespace too, and keeps a repeated
+    key's last value (Properties.load javadoc) — a file the reference
+    parses must parse here the same way."""
+    r = read_hoodie_properties(
         "! legacy comment\n"
         "hoodie.table.name: colon_table\n"
         "  hoodie.table.type = COPY_ON_WRITE\n"
         "hoodie.table.version:8\n"
     )
-    r = read_hoodie_properties(spark, [str(p)]).collect()[0]
-    assert r.failure_reason is None
-    assert r.table_name == "colon_table"
-    assert r.table_type == "COPY_ON_WRITE"
-    assert r.table_version == 8
+    assert r["failure_reason"] is None
+    assert r["table_name"] == "colon_table"
+    assert r["table_type"] == "COPY_ON_WRITE"
+    assert r["table_version"] == 8
+
+    r = read_hoodie_properties(
+        "hoodie.table.name t1\n"
+        "hoodie.table.type\tMERGE_ON_READ\n"
+        "hoodie.table.version=6\n"
+        "hoodie.table.version=8\n"
+    )
+    assert r["failure_reason"] is None
+    assert r["table_name"] == "t1" and r["table_type"] == "MERGE_ON_READ"
+    assert r["table_version"] == 8
 
 
-@slow
-def test_properties_reader_failure_reason(spark, tmp_path):
+def test_properties_reader_failure_reason():
     """Corrupt/missing hoodie.properties -> reference sentinel row
     (ParsedHudiProperties.java:16-22, HoodiePropertiesReader.java:62-80):
     table_name='', MERGE_ON_READ, defaults, failure_reason set."""
-    ok = tmp_path / "ok.properties"
-    ok.write_text("hoodie.table.name=good\nhoodie.table.type=COPY_ON_WRITE\n")
-    no_name = tmp_path / "no_name.properties"
-    no_name.write_text("hoodie.table.type=COPY_ON_WRITE\n")  # @NonNull tableName throws
-    bad_type = tmp_path / "bad_type.properties"
-    bad_type.write_text(
-        "hoodie.table.name=t\nhoodie.table.type=NOT_A_TYPE\n"
-    )  # TableType.valueOf throws
-    bad_version = tmp_path / "bad_version.properties"
-    bad_version.write_text(
-        "hoodie.table.name=t\nhoodie.table.type=MERGE_ON_READ\n"
-        "hoodie.table.version=six\n"
-    )  # Integer.parseInt throws
-    gone = str(tmp_path / "gone.properties")  # never written
-
-    df = read_hoodie_properties(
-        spark, [str(ok), str(no_name), str(bad_type), str(bad_version)], [gone]
-    )
-    rows = {r.path.split("/")[-1]: r for r in df.collect()}
-    assert rows["ok.properties"].failure_reason is None
-    assert rows["ok.properties"].table_name == "good"
-    for f in ("no_name.properties", "bad_type.properties", "bad_version.properties"):
-        r = rows[f]
-        assert r.failure_reason == "HOODIE_PROPERTY_NOT_FOUND_OR_CORRUPTED", f
-        assert r.table_name == "" and r.table_type == "MERGE_ON_READ"
-        assert r.table_version == 6 and r.timeline_layout_version == 1
-    assert rows["gone.properties"].failure_reason == "NO_SUCH_KEY"
-    assert rows["gone.properties"].table_name == ""
+    ok = read_hoodie_properties("hoodie.table.name=good\nhoodie.table.type=COPY_ON_WRITE\n")
+    assert ok["failure_reason"] is None
+    assert ok["table_name"] == "good"
+    corrupt = {
+        "no_name": "hoodie.table.type=COPY_ON_WRITE\n",  # @NonNull tableName throws
+        "bad_type": "hoodie.table.name=t\nhoodie.table.type=NOT_A_TYPE\n",  # TableType.valueOf
+        "bad_version": (  # Integer.parseInt throws
+            "hoodie.table.name=t\nhoodie.table.type=MERGE_ON_READ\nhoodie.table.version=six\n"
+        ),
+        "empty": "",
+        "comments_only": "# written by\n! nothing else\n\n",
+    }
+    for f, text in corrupt.items():
+        r = read_hoodie_properties(text)
+        assert r["failure_reason"] == "HOODIE_PROPERTY_NOT_FOUND_OR_CORRUPTED", f
+        assert r["table_name"] == "" and r["table_type"] == "MERGE_ON_READ"
+        assert r["table_version"] == 6 and r["timeline_layout_version"] == 1
+    gone = read_hoodie_properties(None)  # never written
+    assert gone["failure_reason"] == "NO_SUCH_KEY"
+    assert gone["table_name"] == ""
 
 
-@slow
 def test_run_once_survives_corrupt_and_missing_properties(spark, tmp_path):
-    """A table whose hoodie.properties is corrupt (or absent) must not
-    abort the extractor run — the reference degrades it to a sentinel
-    with a failure reason and a metrics increment
+    """A table whose hoodie.properties is corrupt, empty or absent must
+    not abort the extractor run — the reference degrades it to a
+    sentinel with a failure reason and a metrics increment
     (HoodiePropertiesReader.java:62-80) and keeps processing."""
     root = str(tmp_path / "lake")
     os.makedirs(root)
@@ -208,6 +216,10 @@ def test_run_once_survives_corrupt_and_missing_properties(spark, tmp_path):
         root, "gone", files=["300.commit.requested", "300.inflight", "300.commit"]
     )
     os.remove(os.path.join(gone, ".hoodie", "hoodie.properties"))
+    empty = make_table(
+        root, "empty", files=["400.commit.requested", "400.inflight", "400.commit"]
+    )
+    open(os.path.join(empty, ".hoodie", "hoodie.properties"), "w").close()
 
     cfg = load_config(
         {
@@ -221,33 +233,40 @@ def test_run_once_survives_corrupt_and_missing_properties(spark, tmp_path):
     )
     mirror = str(tmp_path / "mirror")
     metrics = run_once(spark, cfg, str(tmp_path / "state"), mirror)
-    assert metrics["tables_discovered"] == 3
-    assert metrics["table_metadata_processing_failures"] == 2
+    assert metrics["tables_discovered"] == 4
+    assert metrics["table_metadata_processing_failures"] == 3
     # the healthy table processed normally (commit triple + properties)...
     assert metrics["active_batched_files"] == 4
-    # ...and the two degraded tables were skipped, not uploaded: only the
-    # good table's id appears in the mirror
+    # ...and the three degraded tables were skipped, not uploaded: only
+    # the good table's id appears in the mirror
     good_id = uuid3_from_uri(f"{root}/good")
     assert os.listdir(mirror) == [good_id]
 
 
-@slow
-def test_manifest_reader_and_diff(spark, tmp_path):
-    v = tmp_path / "_version_"
-    v.write_text("3\n")
-    m = tmp_path / "manifest_3"
-    m.write_text(
-        '{"files": [{"fileName": "20260101_20260115_0.parquet", "fileLen": 123},'
-        ' {"fileName": "20260116_20260131_0.parquet", "fileLen": 456}]}'
+def test_process_archived_v2_mirrors_only_the_manifest_diff(tmp_path):
+    """V2 archived step (J4): `_version_` 3 over a checkpoint at version
+    2 mirrors only the parquet file manifest_3 adds to manifest_2; an
+    unreadable `_version_` is skipped, not raised."""
+    table = {"table_id": "t", "table_uri": str(tmp_path / "t")}
+    history = tmp_path / "t" / ".hoodie" / "timeline" / "history"
+    history.mkdir(parents=True)
+    old, new = "20260101_20260115_0.parquet", "20260116_20260131_0.parquet"
+    for fn in (old, new):
+        (history / fn).write_text("x")
+    (history / "manifest_2").write_text(f'{{"files": [{{"fileName": "{old}", "fileLen": 1}}]}}')
+    (history / "manifest_3").write_text(
+        f'{{"files": [{{"fileName": "{old}", "fileLen": 1}}, {{"fileName": "{new}", "fileLen": 1}}]}}'
     )
-    assert read_manifest_version(spark, str(v)) == 3
-    cur = read_manifest(spark, str(m))
-    assert cur.count() == 2
-    prev = spark.createDataFrame(
-        [("20260101_20260115_0.parquet",)], ["fileName"]
-    )
-    diff = manifest_diff(cur, prev).collect()
-    assert [r.fileName for r in diff] == ["20260116_20260131_0.parquet"]
+    (history / "_version_").write_text("3\n")
+    checkpoint = {"archived_commits_processed": True, "last_archived_manifest_version": 2}
+    mirror = tmp_path / "mirror"
+
+    updated, n_files = process_archived_v2(table, checkpoint, str(mirror))
+    assert updated["last_archived_manifest_version"] == 3 and n_files == 1
+    assert os.listdir(mirror / "t" / ARCHIVED) == [new]
+
+    (history / "_version_").write_text("three\n")
+    assert process_archived_v2(table, checkpoint, str(mirror)) is None
 
 
 @slow

@@ -9,6 +9,7 @@ from datetime import datetime
 
 import pytest
 
+from lakeview_spark.sources import listing
 from lakeview_spark.sources.listing import discover_tables
 from lakeview_spark.sources.object_store import (
     EPOCH,
@@ -144,8 +145,11 @@ def test_lister_pickles_without_live_client():
     assert clone.list_dir("s3://b/") == []
 
 
-def test_discovery_runs_through_object_store_lister(spark):
-    # the fake client lives in this test module — ship it to executors
+def test_discovery_runs_through_object_store_lister(spark, monkeypatch):
+    # no driver budget: the walk goes to a Spark job at once, so the
+    # lister and the fake client (it lives in this test module) ship to
+    # executors
+    monkeypatch.setattr(listing, "_DRIVER_WALK_BUDGET_S", 0.0)
     spark.sparkContext.addPyFile(__file__)
     # two tables under one lake prefix; .hoodie marker stops descent
     objects = {
@@ -565,7 +569,7 @@ def test_azure_credential_chain_order(monkeypatch):
 # r13 next-6): the remaining semantic cases of the reference's
 # AzureAsyncStorageClientTest.java driven through ObjectStoreLister ->
 # discover_tables and a timeline page, not just fetch_page units:
-# continuation tokens mid-listing, directory flags steering the BFS,
+# continuation tokens mid-listing, directory flags steering the walk,
 # missing-path-as-empty (404 during listPaths), and the no-startAfter
 # resume path (ADLS has no offset parameter, so the checkpoint compare
 # in files_to_upload carries resume instead of the store) ---
@@ -650,7 +654,7 @@ def _adls_fixture_keys():
 
 
 def test_azure_discovery_end_to_end(spark):
-    """discover_tables BFS through ObjectStoreLister + AzurePageClient:
+    """discover_tables walk through ObjectStoreLister + AzurePageClient:
     directory PathItems steer descent, the .hoodie directory entry
     stops it, pagination crosses directory listings mid-stream, and a
     basePath whose path doesn't exist (ADLS 404 during listPaths) is
