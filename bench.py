@@ -1,59 +1,18 @@
-"""Engine benchmark: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
-JSON line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ..., "extended": {...}}.
+"""Headline query benchmark: runs BENCH_QUERIES at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints
+one JSON line {"metric", "value", "unit", "queries", "sf", "n_queries",
+"errors"}; "value" is the sum of the per-query seconds.
 
-The `extended` section times the top-10 heaviest STEADY-STATE queries
-from the full-registry profile (scripts/profile_queries.py — regenerate
-EXTENDED_STEADY when plans change) after an untimed scratch prewarm, so
-plan regressions in the queries outside the 30-query headline set move
-a driver-tracked number (r6 verdict next-4).
+Each query is timed from the registry call to the end of
+`write.format("noop").mode("overwrite").save()`, as perfbench/queries.py
+does, so the whole result is computed and nothing is pruned. One
+untimed warm-up runs the same way first. Queries run once each in list
+order, so a query that first touches a shared scratch table pays its
+build. A failing query does not stop the others; the script exits 1 if
+any query failed.
 
---split-files N (or SPARK_GRAFT_SPLIT_FILES=N): rewrite each table as N
-parquet files in a temp dir first (untimed) and bench against that.
-Each testdata table is ONE single-row-group file Spark cannot split
-(SCALE.md §6), so the default cold numbers under-report scan
-parallelism; the split mode measures what a real multi-file layout
-gets. BASELINE.md records both (r6 verdict next-7).
-
-First-execution adjudication (r11, VERDICT r10 next-5): single-shot
-headline timings are FIRST-EXECUTION numbers — codegen + scratch
-first-touch + host contention can read 2-3x the steady band (the r9
-semdedup dispute and the r10 shipping_priority/pricing_summary phantom
-regressions were exactly this). Every headline query whose cold
-reading is >= ADJUDICATE_ABOVE_S is re-executed once and the pair is
-emitted under "adjudication" {name: {"first": s, "second": s}} — a
-large first/second ratio marks a first-execution artifact, a second
-reading still above the BASELINE.md band marks a real regression.
-The headline "value"/"queries" stay the cold numbers (comparable to
-every earlier round); adjudication is additive.
-
-Output protocol (r12): the verbose payload prints first, then a COMPACT
-summary JSON prints as the FINAL stdout line — the driver's tail
-capture truncated the grown verbose line at r11 ("parsed": null in
-BENCH_r11.json), so the tail now always ends with a small record
-carrying the headline value, sf, canaries, and the adjudication
-verdict.
-
-Cohort-level contention adjudication (r13, VERDICT r12 next-1): the
-per-query canary rule failed at r12 — canaries sat in band while
-extended_r9 read 96.2 s vs its ~23-26 s quiet band, because pure-map
-canaries don't feel shuffle/stream-twin contention. Each extended
-cohort total is now checked against its frozen BASELINE.md quiet band
-(COHORT_BANDS_S); any cohort above COHORT_CONTENTION_RATIO x band is
-re-run once within the same invocation (scratch already warm, so the
-retry is a pure steady reading) and BOTH totals are emitted, plus a
-top-level "contended": true flag in the final summary line. A retry
-still above the band is a real regression; a retry back inside it is
-host contention, adjudicated in the artifact itself.
-
-Sidecar artifact (r13, VERDICT r12 next-7): the per-query headline
-dict outgrew the driver's tail capture twice (r11, r12) — the FULL
-payload (cohort dicts, per-query first/second, retry readings) is now
-also written to bench_details_r{N}.json next to this file (N inferred
-from the highest committed BENCH_r*.json + 1, overridable with
-SPARK_GRAFT_ROUND), so the committed round record keeps per-query
-detail regardless of what the stdout tail captures.
+The perf gate for both layers is perfbench/run.py (perfbench/README.md);
+this script keeps the headline number that BENCH_r*.json records.
 """
 
 from __future__ import annotations
@@ -67,27 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-# headline queries at/above this cold reading get a second execution
-# (the adjudication block in the payload — module docstring)
-ADJUDICATE_ABOVE_S = 1.0
-
-# Frozen quiet-host cohort totals (BASELINE.md r12 "Cohorts (quiet)").
-# extended_r12 uses the all-ten first-execution-inclusive reading; the
-# bands are deliberately the QUIET numbers so the 1.7x trigger fires on
-# the contention signature (r12's committed artifact read 2.6-3.7x).
-COHORT_BANDS_S = {
-    "extended": 20.7,
-    "extended_r9": 23.0,
-    "extended_late_r11": 24.1,
-    "extended_r12": 17.4,
-    "extended_r13": 20.4,  # r13 final close (11 queries incl. stream_paragraph_gate)
-    # quiet r14 reading; first-toucher-heavy BY DESIGN (the two derived-
-    # corpus audits + the upsert charge whole index builds to their
-    # first execution), so warm-host readings run 20-50% over — the
-    # 1.7x trigger leaves that headroom (post-suite close read 59-75)
-    "extended_r14": 49.4,
-}
-COHORT_CONTENTION_RATIO = 1.7
 
 BENCH_QUERIES = [
     "pricing_summary",
@@ -117,444 +55,49 @@ BENCH_QUERIES = [
     "brand_revenue_share",
     "events_sessionization",
     "dedup_embedding_cosine",
-    "pack_training_sequences",  # added r4 (~1.1 s at sf0.1; BASELINE.md)
-    "text_boilerplate_lines",  # added late r4 (line-DF shuffle; BASELINE.md)
-    "events_funnel_conversion",  # added late r4 (3-stage user_id join chain)
-]
-
-# Top-10 heaviest steady-state queries from the r7 full-registry profile
-# (python scripts/profile_queries.py /root/testdata/sf0.1 — regenerate
-# this list when plans change materially). Timed after an untimed
-# prewarm, so these numbers are pure plan+kernel cost with no
-# first-touch materialization noise.
-EXTENDED_STEADY = [
-    "kmeans_train",  # 9.7 s — iterative trainer (rows-only query)
-    "stream_value_cusum",  # 3.7 s — stateful AvailableNow twin
-    "checkpoint_lookback",  # 3.6 s — packing + lookback composition
-    "stream_event_sessions",  # 2.8 s — session_window twin
-    "active_batch_packing",  # 2.6 s — greedy packer UDF
-    "dedup_semdedup",  # 2.1 s — cluster-restricted cosine pairs
-    "stream_doc_dedup",  # 2.0 s — dropDuplicatesWithinWatermark twin
-    "stream_token_stats",  # 2.0 s — windowed token telemetry twin
-    "embedding_centroid_assign",  # 2.0 s — centroid assignment kernel
-    "eval_lsh_precision_recall",  # 1.8 s — LSH vs exact-Jaccard audit
-]
-
-# Frozen r9-cohort section (r9 VERDICT next-7): the headline and
-# extended-steady lists froze pre-r9, so none of the fifteen r9 ops
-# (nor the retrained PQ family) was tracked round-over-round —
-# regressions there only surfaced in ad-hoc SCALE.md probes. This list
-# is FROZEN at r10; nominal bands live in BASELINE.md §extended-r9.
-# Timed after the same untimed scratch prewarm as EXTENDED_STEADY.
-EXTENDED_R9 = [
-    "corpus_source_overlap_theta",  # theta-sketch set algebra
-    "sample_dsir_select",  # DSIR bigram-LLR importance selection
-    "graph_kcore",  # k-core onion peeling (materialized rounds)
-    "corpus_bpe_train",  # 8-round BPE trainer
-    "stream_interval_join",  # stream-stream inner interval join
-    "stream_interval_join_outer",  # left-outer interval join
-    "stream_session_daily_rollup",  # chained stateful session->daily
-    "similarity_ann_sq8",  # SQ8 scalar-quantized ANN + recall audit
-    "similarity_ann_ivf_pq",  # composed IVF-PQ search (trained codebooks)
-    "eval_pq_recall",  # PQ codebook recall audit
+    "pack_training_sequences",
+    "text_boilerplate_lines",
+    "events_funnel_conversion",
 ]
 
 
-# FROZEN late-r11 session-2 cohort: the queries added after the
-# r11 close sweep, tracked round-over-round like EXTENDED_R9; nominal
-# bands live in BASELINE.md "Late-r11 session-2 additions". Timed after
-# the same untimed scratch prewarm.
-EXTENDED_LATE_R11 = [
-    "corpus_zipf_fit",  # bitlength Zipf-exponent fit
-    "corpus_heaps_growth",  # Heaps'-law vocabulary growth checkpoints
-    "corpus_snapshot_drift",  # exact TV drift between ingestion halves
-    "eval_classifier_calibration",  # classifier reliability diagram
-    "supplier_profit_q9",  # deepest star-join fan-out (Q9)
-    "promo_type_share_q14",  # monthly promo share (Q14)
-    "sample_kcenter_select",  # greedy k-center coreset selection
-    "stream_drift_monitor",  # live bucket-histogram TV monitor
-    "dedup_symspell_pairs",  # deletion-neighborhood fuzzy string join
-    "orders_market_basket",  # level-2 association mining
-    "mix_budget_plan",  # data-constrained mixture planning
-    "corpus_collocations_pmi",  # PMI collocation extraction
-    "eval_community_conductance",  # community boundary-leak audit
-    "eval_lsh_scurve",  # empirical LSH transfer function
-    "eval_ivfpq_nprobe_sweep",  # recall-vs-cost tuning curve
-    "customer_rfm_segments",  # RFM quartile segmentation
-    "events_markov_transitions",  # in-session transition matrix
-]
-
-
-# FROZEN r12 cohort: the round's new/changed queries, tracked
-# round-over-round like EXTENDED_R9/EXTENDED_LATE_R11; nominal bands in
-# BASELINE.md "r12 additions". Timed after the same untimed prewarm
-# (rq_codes now builds in the prewarm, so eval_rq_recall reads steady).
-EXTENDED_R12 = [
-    "similarity_ann_ivf_pq_refined",  # exact-rerank refinement stage
-    "eval_rq_recall",  # now reads the prewarmed rq_codes index
-    "text_perplexity_bigram",  # KenLM-pruned materialized LM
-    "mix_source_caps",  # per-source histogram-threshold caps
-    "cheapest_supplier_q2",  # Q2 argmin-lookup star shape
-    "promo_stock_suppliers_q20",  # Q20 threshold semi-join shape
-    "events_attribution_markov",  # removal-effect attribution walk
-    "retrieval_mmr_rerank",  # greedy diversified rerank (5 materialized rounds)
-    "eval_mmr_diversity",  # its relevance-vs-diversity audit
-    "stream_source_caps",  # live admission-cap twin (AvailableNow floor class)
-]
-
-
-# FROZEN r13 cohort: the round's new/changed queries, tracked
-# round-over-round like the earlier frozen cohorts; nominal bands in
-# BASELINE.md "r13 additions". Timed after the same untimed prewarm
-# (para_scores builds inside text_paragraph_ppl's first execution —
-# charged here, the honest first-touch number).
-EXTENDED_R13 = [
-    "text_paragraph_ppl",  # paragraph LM scores + tercile buckets
-    "text_paragraph_apply",  # kept-paragraph reassembly
-    "corpus_source_similarity",  # now overflow-guarded cross-mult
-    "eval_classifier_calibration",  # guarded gap terms
-    "stream_drift_monitor",  # guarded TV fold (AvailableNow floor class)
-    "events_attribution_markov",  # HUGEINT oracle walk
-    "dedup_ngram_jaccard",  # single-pass index build rider
-    "pipeline_train_set",  # flag-extended funnel (default path)
-    "similarity_ann_graph",  # greedy beam search over the navigable graph
-    "eval_graph_ann_recall",  # its recall@10 audit (exact-truth scan)
-    "stream_paragraph_gate",  # live CCNet paragraph gate (AvailableNow floor class)
-]
-
-
-# FROZEN r14 cohort: the round's new/changed queries. dedup_ngram_jaccard
-# and corpus_source_similarity are shared with the r13 cohort and keep
-# their first reading (the cross-cohort convention). The two
-# derived-corpus audits run LAST: their first execution charges the
-# whole derived-dataset index build (clustered corpus / base graph +
-# attach) — the honest first-toucher number, same convention as the
-# other scratch-charging firsts.
-EXTENDED_R14 = [
-    "similarity_ann_graph",  # + cluster-local exact rerank (r14)
-    "eval_graph_ann_recall",  # recall@10 1.00 at sf1 post-rerank
-    "dedup_ngram_jaccard",  # window-count df cap (bounded agg state)
-    "corpus_source_similarity",  # one-pass basket-shape rewrite
-    "eval_paragraph_retention",  # CCNet per-(lang, bucket) ablation
-    "similarity_ann_graph_upsert",  # O(delta) attach edge set
-    "eval_graph_ann_recall_clustered",  # derived clustered corpus (heavy first)
-    "eval_graph_upsert_recall",  # upserted-graph recall (heavy first)
-]
-
-
-def _round_number() -> int:
-    """Round N for the bench_details_r{N}.json sidecar: explicit
-    SPARK_GRAFT_ROUND (required for intra-round re-runs after the
-    driver has already written this round's BENCH file), else highest
-    git-TRACKED BENCH_r*.json + 1 — the driver writes BENCH_r{N} at
-    round close, so an on-disk-but-uncommitted BENCH file belongs to
-    the round in flight and must not bump N (it did in r13: a bench
-    re-run after the driver wrote BENCH_r13.json labeled its sidecar
-    bench_details_r14.json). Falls back to the on-disk glob when git
-    is unavailable."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    import glob
-    import re
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    names: list[str] = []
-    try:
-        out = subprocess.run(
-            ["git", "-C", here, "ls-files", "BENCH_r*.json"],
-            capture_output=True, text=True, timeout=10,
-        )
-        if out.returncode == 0:
-            names = out.stdout.split()
-    except Exception:
-        names = []
-    if not names:
-        names = [os.path.basename(f)
-                 for f in glob.glob(os.path.join(here, "BENCH_r*.json"))]
-    nums = []
-    for f in names:
-        m = re.search(r"BENCH_r(\d+)\.json$", f)
-        if m:
-            nums.append(int(m.group(1)))
-    return (max(nums) + 1) if nums else 0
-
-
-def _split_copy(spark, sf_dir: str, n_files: int) -> str:
-    """Rewrite every table as n_files parquet parts under a temp dir —
-    the multi-file layout a real deployment scans — and return it.
-    Untimed: layout preparation is not query cost."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="bench_split_")
-    tables = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    for name in tables:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.repartition(n_files).write.mode("overwrite").parquet(
-            f"{out_dir}/{name}.parquet"
-        )
-    return out_dir
+def _run(spark, query) -> None:
+    query(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
     from lakeview_spark import get_spark
     from lakeview_spark.plans import QUERIES
 
-    split_files = int(os.environ.get("SPARK_GRAFT_SPLIT_FILES", "0"))
-    if "--split-files" in sys.argv:
-        split_files = int(sys.argv[sys.argv.index("--split-files") + 1])
-
     spark = get_spark("lakeview-bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
 
-    global SF_DIR
-    sf_label = SF_DIR
-    if split_files > 1:
-        SF_DIR = _split_copy(spark, SF_DIR, split_files)
-
-    # warm the JVM + parquet footers once (not timed)
-    QUERIES["pricing_summary"](spark, SF_DIR).count()
-
-    # SPARK_GRAFT_PREWARM=1: build the shared scratch tables untimed so
-    # the timings below are STEADY-STATE (what a long-lived deployment
-    # sees). Default off — the default run charges first-touch
-    # materialization to the first query that needs it, which is the
-    # honest cold-start number (BASELINE.md reports the split).
-    if os.environ.get("SPARK_GRAFT_PREWARM") == "1":
-        from lakeview_spark.pipeline import prewarm_scratch
-
-        prewarm_scratch(spark, SF_DIR)
+    # warm the JVM and the parquet footers once, untimed
+    _run(spark, QUERIES["pricing_summary"])
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in BENCH_QUERIES:
-        if name not in QUERIES:
-            continue
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
-            n = QUERIES[name](spark, SF_DIR).count()
-            assert n >= 0
-            timings[name] = round(time.time() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — a broken query must not
-            # hide the numbers for the rest (round-3 lesson: the bench
-            # died at query 8 and the round lost its headline entirely)
+            _run(spark, QUERIES[name])
+            timings[name] = round(time.perf_counter() - t0, 3)
+        except Exception as exc:  # noqa: BLE001 — a broken query must not hide the others' numbers
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-    total = round(sum(timings.values()), 3)
-
-    # first-vs-second adjudication for the headline set (module
-    # docstring): second executions of queries whose cold reading could
-    # plausibly be first-execution skew. Runs AFTER the whole cold loop
-    # so the second readings don't warm later cold ones.
-    adjudication: dict[str, dict[str, float]] = {}
-    for name, first in timings.items():
-        if first < ADJUDICATE_ABOVE_S:
-            continue
-        t0 = time.time()
-        try:
-            QUERIES[name](spark, SF_DIR).count()
-            adjudication[name] = {
-                "first": first,
-                "second": round(time.time() - t0, 3),
-            }
-        except Exception as exc:  # noqa: BLE001 — same containment
-            errors[f"adjudicate_{name}"] = f"{type(exc).__name__}: {exc}"[:200]
-
-    # extended section: steady-state cost of the registry's heaviest
-    # queries (prewarm untimed; include_clusters because dedup_semdedup
-    # and the graph queries ride the cluster/knn scratch tables). A
-    # broken prewarm or extended query must never cost the HEADLINE
-    # numbers — the driver depends on the one JSON line printing.
-    ext_timings: dict[str, float] = {}
-    try:
-        from lakeview_spark.pipeline import prewarm_scratch
-
-        prewarm_scratch(spark, SF_DIR, include_clusters=True)
-    except Exception as exc:  # noqa: BLE001
-        errors["extended_prewarm"] = f"{type(exc).__name__}: {exc}"[:200]
-    else:
-        for name in (
-            EXTENDED_STEADY + EXTENDED_R9 + EXTENDED_LATE_R11 + EXTENDED_R12 + EXTENDED_R13
-            + EXTENDED_R14
-        ):
-            # names shared across cohorts (eval_classifier_calibration,
-            # dedup_ngram_jaccard) keep their FIRST reading so the
-            # earlier cohorts' measurement protocol is unchanged; the
-            # newer cohort shares that reading
-            if name not in QUERIES or name in ext_timings:
-                continue
-            t0 = time.time()
-            try:
-                n = QUERIES[name](spark, SF_DIR).count()
-                # a silently-empty STREAM result under a rewritten
-                # layout is a broken measurement, not a fast one (r7
-                # ADVICE: the stream twins' pathGlobFilter matched zero
-                # part files under --split-files and timed empty
-                # streams; the sources now dispatch on layout — keep
-                # the tripwire). Scoped to stream_* names: a batch
-                # guard-style query could legitimately return 0 rows.
-                if split_files > 1 and n == 0 and name.startswith("stream_"):
-                    errors[name] = "empty stream under split layout"
-                else:
-                    ext_timings[name] = round(time.time() - t0, 3)
-            except Exception as exc:  # noqa: BLE001 — same containment
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-
-    # Cohort-level contention adjudication (module docstring, r13): a
-    # cohort total above COHORT_CONTENTION_RATIO x its frozen quiet band
-    # gets ONE full re-run inside this invocation. Scratch is already
-    # built, so the retry is a steady reading: retry back inside the
-    # band = host contention (flagged, adjudicated in-artifact); retry
-    # still above = a real regression the next round must chase.
-    cohort_lists = {
-        "extended": EXTENDED_STEADY,
-        "extended_r9": EXTENDED_R9,
-        "extended_late_r11": EXTENDED_LATE_R11,
-        "extended_r12": EXTENDED_R12,
-        "extended_r13": EXTENDED_R13,
-        "extended_r14": EXTENDED_R14,
-    }
-    cohort_retries: dict[str, dict] = {}
-    contended = False
-    # the frozen bands are sf0.1 readings — at any other SF a cohort
-    # exceeding them is DATA, not contention (the r13 sf1 run fired
-    # two spurious retries before this gate), so adjudicate only at
-    # the band's own scale factor
-    sf_label_now = os.path.basename(sf_label.rstrip("/")).replace("sf", "")
-    bands_apply = sf_label_now == "0.1" and split_files <= 1
-    for cname, members in cohort_lists.items():
-        first_total = sum(v for k, v in ext_timings.items() if k in members)
-        band = COHORT_BANDS_S.get(cname)
-        if not bands_apply or not band or first_total <= band * COHORT_CONTENTION_RATIO:
-            continue
-        contended = True
-        retry: dict[str, float] = {}
-        for name in members:
-            if name not in QUERIES or name not in ext_timings:
-                continue
-            t0 = time.time()
-            try:
-                QUERIES[name](spark, SF_DIR).count()
-                retry[name] = round(time.time() - t0, 3)
-            except Exception as exc:  # noqa: BLE001 — same containment
-                errors[f"retry_{name}"] = f"{type(exc).__name__}: {exc}"[:200]
-        cohort_retries[cname] = {
-            "first_total": round(first_total, 3),
-            "retry_total": round(sum(retry.values()), 3),
-            "band": band,
-            "queries": retry,
-        }
-
-    sf = os.path.basename(sf_label.rstrip("/")).replace("sf", "")
-    payload = {
-        "metric": "lakeview_spark bench: headline query wall-clock",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "adjudication": adjudication,
-        "sf": float(sf) if sf else None,
-        "extended": {
-            "what": "top-10 heaviest steady-state queries, scratch prewarmed untimed",
-            "value": round(sum(v for k, v in ext_timings.items() if k in EXTENDED_STEADY), 3),
-            "queries": {k: v for k, v in ext_timings.items() if k in EXTENDED_STEADY},
-        },
-        "extended_r9": {
-            "what": "frozen r9-cohort queries, same prewarm (BASELINE.md bands)",
-            "value": round(sum(v for k, v in ext_timings.items() if k in EXTENDED_R9), 3),
-            "queries": {k: v for k, v in ext_timings.items() if k in EXTENDED_R9},
-        },
-        "extended_late_r11": {
-            "what": "frozen late-r11 session-2 cohort, same prewarm (BASELINE.md bands)",
-            "value": round(sum(v for k, v in ext_timings.items() if k in EXTENDED_LATE_R11), 3),
-            "queries": {k: v for k, v in ext_timings.items() if k in EXTENDED_LATE_R11},
-        },
-        "extended_r12": {
-            "what": "frozen r12 new/changed cohort, same prewarm (BASELINE.md bands)",
-            "value": round(sum(v for k, v in ext_timings.items() if k in EXTENDED_R12), 3),
-            "queries": {k: v for k, v in ext_timings.items() if k in EXTENDED_R12},
-        },
-        "extended_r13": {
-            "what": "frozen r13 new/changed cohort, same prewarm (BASELINE.md bands)",
-            "value": round(sum(v for k, v in ext_timings.items() if k in EXTENDED_R13), 3),
-            "queries": {k: v for k, v in ext_timings.items() if k in EXTENDED_R13},
-        },
-        "extended_r14": {
-            "what": "frozen r14 new/changed cohort, same prewarm; the two derived-corpus audits charge their index builds to their first reading",
-            "value": round(sum(v for k, v in ext_timings.items() if k in EXTENDED_R14), 3),
-            "queries": {k: v for k, v in ext_timings.items() if k in EXTENDED_R14},
-        },
-    }
-    if cohort_retries:
-        payload["cohort_retries"] = cohort_retries
-        payload["contended"] = True
-    if split_files > 1:
-        payload["split_files"] = split_files
-    if errors:
-        payload["errors"] = errors
-
-    # Sidecar with the FULL detail (module docstring, r13) — written
-    # before stdout so a truncated tail capture never loses per-query
-    # numbers again. Never let a sidecar write failure cost the run.
-    try:
-        sidecar = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"bench_details_r{_round_number()}.json",
-        )
-        with open(sidecar, "w") as fh:
-            json.dump(payload, fh, indent=1)
-    except Exception as exc:  # noqa: BLE001
-        errors["sidecar_write"] = f"{type(exc).__name__}: {exc}"[:200]
-    # Verbose payload first; then a COMPACT summary as the FINAL stdout
-    # line (r11 verdict next-2: the one-line payload outgrew the
-    # driver's tail capture and BENCH_r11.json archived "parsed": null —
-    # the tail must always end with a small parseable record carrying
-    # the headline value). Canaries = the two lightest fixed headline
-    # queries; adjudication verdict = worst second/first ratio observed
-    # (second >> band marks a real regression, second << first marks
-    # first-execution skew — BASELINE.md r11 rule).
-    print(json.dumps(payload))
-    summary = {
-        "metric": "lakeview_spark bench: headline query wall-clock",
-        "value": total,
-        "unit": "sec",
-        # Flat per-query map (r15, VERDICT r14 next-2a): the driver keeps
-        # only a short stdout tail and PERF_r14 had per_query: {} /
-        # n_common: 0 because the headline per-query seconds lived solely
-        # in the verbose payload line. The summary line now carries the
-        # flat {query: sec} map itself so the driver can compute
-        # per-query deltas and scaling ratios. Additions-only: every
-        # pre-existing summary key is unchanged.
-        "queries": timings,
-        "sf": payload["sf"],
-        "n_queries": len(timings),
-        "canaries": {
-            k: timings[k]
-            for k in ("text_token_count", "multimodal_metadata")
-            if k in timings
-        },
-        "adjudication_max_second": (
-            round(max(v["second"] for v in adjudication.values()), 3)
-            if adjudication
-            else None
-        ),
-        "extended_total": round(sum(ext_timings.values()), 3),
-        "cohorts": {
-            cname: round(sum(v for k, v in ext_timings.items() if k in members), 3)
-            for cname, members in cohort_lists.items()
-        },
-        "contended": contended,
-        "cohort_retry_totals": {
-            cname: rec["retry_total"] for cname, rec in cohort_retries.items()
-        },
-        "errors": len(errors),
-    }
-    if split_files > 1:
-        summary["split_files"] = split_files
-    print(json.dumps(summary))
     spark.stop()
+
+    sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
+    if errors:
+        print(json.dumps({"errors": errors}))
+    print(json.dumps({
+        "metric": "lakeview_spark bench: headline query wall-clock",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": float(sf) if sf else None,
+        "n_queries": len(timings),
+        "errors": len(errors),
+    }))
     if errors:
         sys.exit(1)
 

@@ -17,106 +17,3 @@ from lakeview_spark.pipeline import (  # noqa: F401
     repetition,
 )
 
-
-def prewarm_scratch(spark, sf_dir: str, include_clusters: bool = False) -> None:
-    """Build every shared materialized scratch table once, untimed —
-    THE prewarm list, shared by bench.py (SPARK_GRAFT_PREWARM) and
-    scripts/profile_queries.py so the two can't measure different warm
-    states. `include_clusters` adds the connected-components label
-    table (needed by the full-registry profile, not by the headline
-    bench set)."""
-    from lakeview_spark.pipeline.curation import simhash64_materialized
-    from lakeview_spark.pipeline.dedup import (
-        _doc_shingles,
-        jaccard_index_materialized,
-        minhash_signatures_materialized,
-    )
-    from lakeview_spark.pipeline.corpus import tfidf_top5_materialized
-    from lakeview_spark.pipeline.similarity import (
-        _lsh_bucketed,
-        similarity_knn_graph,
-    )
-
-    builders = [
-        _doc_shingles,
-        jaccard_index_materialized,
-        minhash_signatures_materialized,
-        simhash64_materialized,
-        _lsh_bucketed,
-        tfidf_top5_materialized,
-        similarity_knn_graph,
-    ]
-    if include_clusters:
-        from lakeview_spark.pipeline.clustering import clusters_materialized
-
-        builders.append(clusters_materialized)
-        # the PQ index halves (codes + coarse ids): built once per
-        # (session, dataset) like a deployment's stored ANN index —
-        # backs embedding_pq_codebook_stats / eval_pq_recall /
-        # similarity_ann_ivf_pq in the extended-r9 bench set (r10)
-        from lakeview_spark.pipeline.similarity import (
-            _ivfpq_coarse_parts,
-            _pq_emb,
-            pq_codes_materialized,
-        )
-
-        builders.append(pq_codes_materialized)
-        builders.append(
-            lambda s, d: _ivfpq_coarse_parts(s, d, _pq_emb(s, d))[1]
-        )
-        # the RQ stage-2 half (r12, VERDICT r11 next-8): rq_codes rides
-        # the same lifecycle — building it here also trains + caches
-        # the stage-2 codebook, so eval_rq_recall reads the index
-        # instead of re-training it on first execution
-        from lakeview_spark.pipeline.similarity import rq_codes_materialized
-
-        builders.append(rq_codes_materialized)
-        # the MMR rerank scratch chain (r13, VERDICT r12 next-4):
-        # mmr_cands + the per-round pick/sel tables all materialize
-        # eagerly inside retrieval_mmr_rerank, so one call here builds
-        # the whole chain untimed — a fresh session otherwise charges
-        # ~29.6 s (the full IVF-PQ chain + 9 round scratches) to the
-        # first rerank execution vs its 0.91 s steady band
-        from lakeview_spark.pipeline.similarity import retrieval_mmr_rerank
-
-        builders.append(retrieval_mmr_rerank)
-        # the graph-ANN navigable-graph index + its per-round beam
-        # scratch (r13): builds gann_edges + the 17 beam tables once,
-        # the same lifecycle as the MMR chain above
-        from lakeview_spark.pipeline.similarity import _gann_final_beam
-
-        builders.append(_gann_final_beam)
-        # the packed-batch table (the inherently-sequential per-table
-        # Python packer) backs active_batch_packing AND
-        # checkpoint_lookback — both in the extended steady set, and
-        # whichever runs first would otherwise pay the build
-        from lakeview_spark.plans.coverage import _continue_batches
-
-        builders.append(_continue_batches)
-        # r15 scratch additions (each backs a steady-cohort query; the
-        # rq_codes precedent — building them here keeps the cohorts'
-        # frozen bands steady-comparable): the semdedup assigned-vector
-        # frame, the shared LSH truth-pair table, the trained
-        # classifier weights, the market-basket item/support tables,
-        # and the per-source token histogram
-        from lakeview_spark.pipeline.classifier import classifier_weights
-        from lakeview_spark.pipeline.evaluation import _lsh_pairs_materialized
-        from lakeview_spark.pipeline.mixing import source_hist_materialized
-        from lakeview_spark.pipeline.similarity import semdedup_v_materialized
-        from lakeview_spark.plans.tpch_extra import (
-            basket_sup_materialized,
-            rfm_cust_materialized,
-        )
-
-        builders.extend(
-            [
-                semdedup_v_materialized,
-                _lsh_pairs_materialized,
-                classifier_weights,
-                basket_sup_materialized,  # builds basket_items first
-                source_hist_materialized,
-                rfm_cust_materialized,
-            ]
-        )
-    for builder in builders:
-        builder(spark, sf_dir).count()

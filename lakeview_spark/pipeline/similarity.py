@@ -146,7 +146,7 @@ _NEAR_DUP_COSINE = 0.35
 # Embedding width is fixed (testdata schema; every oracle's _DOT_SQL
 # hardcodes range(1, 65)), so the float kernels unroll to codegen
 # arithmetic (r14 optimization, guide §4.1: higher-order lambdas run
-# INTERPRETED — scripts/kernel_probe.py measured the unrolled form
+# INTERPRETED — e5e3d31:scripts/kernel_probe.py measured the unrolled form
 # ~1.3x the fold on the pair kernel). Bit-identical by construction:
 # `0.0 + t0 + t1 + ...` parses left-associative, which IS the fold's
 # evaluation order including the 0.0 seed (the seed matters only for
@@ -2540,7 +2540,7 @@ _IVFPQ_TOP = 10
 # A production index holds the visited FRACTION: visit ceil(k /
 # _IVFPQ_NPROBE_FRAC) coarse clusters, floored at _IVFPQ_NPROBE_MIN.
 # FRAC=4 (25% of clusters) chosen from the measured sf1 grid
-# (scripts/nprobe_grid_sf1.py, SCALE.md §8a3b): refined recall@10 0.71
+# (1a51bd5:scripts/nprobe_grid_sf1.py, SCALE.md §8a3b): refined recall@10 0.71
 # at k=156, vs 0.51 at k//8 and 0.11 at fixed 3. The driver correctness
 # scales keep k=4 -> nprobe=3 byte-identically (ceil(4/4)=1 < MIN).
 _IVFPQ_NPROBE_MIN = 3
