@@ -6,16 +6,19 @@ order (TableMetadataUploaderService.java:393-442): the V2 manifest diff,
 the V1-style archived timeline (once ever), then the active timeline,
 each step listing -> filter -> sort -> batch -> mirror -> checkpoint.
 
-The reference runs tables in batches of 20 on a thread pool; here the
-whole upload phase is one Spark job, one task per group of about eight
-tables (parallelism across tables = Spark tasks, order within a table
-kept inside its task, SURVEY.md:240). A table's metadata is KBs, so a
-Spark job per phase cost more in scheduling than the work it did. The
-per-table control state (the table list, checkpoints, manifest
-versions) stays in plain Python on the driver: one checkpoint snapshot
-goes out with the tasks and one upsert writes back what they return.
-A failed table keeps the progress of its finished steps and does not
-stop the others; the round then raises, naming it.
+The reference runs tables in batches of 20 on a thread pool. Here the
+upload follows the same driver-first rule as discovery
+(lakeview_spark.driver_first): the driver uploads one table after
+another, in table_uri order, until it has spent what a Spark job costs
+to start; the tables left over go to one Spark job, dealt round-robin
+over its tasks (parallelism across tables = Spark tasks, order within a
+table kept inside one call, SURVEY.md:240). A table's metadata is KBs,
+so a steady round, where few files are new, finishes on the driver and
+launches no job. The per-table control state (the table list,
+checkpoints, manifest versions) stays in plain Python on the driver:
+one checkpoint snapshot goes out and one upsert writes back what the
+calls return. A failed table keeps the progress of its finished steps
+and does not stop the others; the round then raises, naming it.
 
 CONTINUOUS mode (§3.2, run_continuous) runs the two phases on the
 reference's own schedules: discovery every 30 min, an upload poll every
@@ -34,6 +37,7 @@ import traceback
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakeview_spark import driver_first
 from lakeview_spark.config import EngineConfig
 from lakeview_spark.constants import (
     ARCHIVED_FOLDER_NAME,
@@ -287,7 +291,8 @@ def upload_table(
     """Upload one table, strictly in order: the V2 manifest diff, the
     V1-style archived timeline if not yet processed (README.md:423-427),
     then the active timeline, each step starting from the checkpoint the
-    previous one produced. Runs inside a Spark task.
+    previous one produced. Runs on the driver or inside a Spark task
+    (upload_round), with the same result either way.
 
     Returns one row: the checkpoint after the last step that succeeded,
     the per-step counts, and the traceback of a failure (steps after a
@@ -356,11 +361,14 @@ def upload_round(
     TableMetadataUploaderService.java). Separated from discovery so
     CONTINUOUS mode can run the two on independent cadences.
 
-    One Spark job runs upload_table for every table; the checkpoints go
-    out as one snapshot and come back as one upsert of the changed rows.
-    If any table failed, the round raises after that upsert, so the
-    tables that succeeded (and the finished steps of those that did not)
-    keep their progress."""
+    upload_table runs on the driver, table after table in the order
+    given (discovery's table_uri order), until ``driver_first.JOB_START_S``
+    is spent; the tables left over go to one Spark job, and
+    ``upload_tables_in_job`` reports how many (0 when the driver
+    finished). The checkpoints go out as one snapshot and come back as
+    one upsert of the changed rows. If any table failed, the round raises
+    after that upsert, so the tables that succeeded (and the finished
+    steps of those that did not) keep their progress."""
     metrics: dict = {}
     store = CheckpointStore(spark, os.path.join(state_dir, "checkpoints"))
     metrics["tables_initialized"] = store.initialize_tables(t["table_id"] for t in tables)
@@ -372,12 +380,16 @@ def upload_round(
     # the healthy tables
     healthy = [t for t in tables if not t["failure_reason"]]
     ckpts = store.snapshot()
-    results = []
-    if healthy:
-        items = [(t, ckpts[t["table_id"]]) for t in healthy]
-        task = functools.partial(upload_table, config=config, mirror_dir=mirror_dir, lister=lister)
-        n_slices = max(1, min(256, (len(items) + 7) // 8))
-        results = spark.sparkContext.parallelize(items, n_slices).map(task).collect()
+    items = [(t, ckpts[t["table_id"]]) for t in healthy]
+    task = functools.partial(upload_table, config=config, mirror_dir=mirror_dir, lister=lister)
+    results: list[dict] = []
+    start = time.perf_counter()
+    while len(results) < len(items) and time.perf_counter() - start < driver_first.JOB_START_S:
+        results.append(task(items[len(results)]))
+    rest = items[len(results) :]
+    if rest:
+        results += driver_first.finish_in_job(spark, rest, lambda share: map(task, share))
+    metrics["upload_tables_in_job"] = len(rest)
     changed = [r["checkpoint"] for r in results if r["checkpoint"] != ckpts[r["table_id"]]]
     if changed:
         store.upsert(changed)
@@ -393,11 +405,12 @@ def upload_round(
         else:
             metrics[f"{tt}_files"] = 0
 
-    failed = [r for r in results if r["error"]]
+    # sorted, so the message does not depend on which side ran a table
+    failed = sorted((r for r in results if r["error"]), key=lambda r: r["table_id"])
     if failed:
         raise RuntimeError(
             f"upload failed for {len(failed)} table(s) "
-            f"{sorted(r['table_id'] for r in failed)}; first error:\n{failed[0]['error']}"
+            f"{[r['table_id'] for r in failed]}; first error:\n{failed[0]['error']}"
         )
     return metrics
 
@@ -412,12 +425,12 @@ def run_once(
     """One extractor round (ONCE mode): discovery then upload, fused
     (runOnce, TableDiscoveryAndUploadJob.java:88-101). Returns a metrics
     dict (SURVEY §2.4 A5)."""
-    t0 = time.time()
+    t0 = time.perf_counter()
     tables, metrics = discover_round(spark, config, lister)
     metrics.update(
         upload_round(spark, config, tables, state_dir, mirror_dir, lister)
     )
-    metrics["elapsed_s"] = round(time.time() - t0, 3)
+    metrics["elapsed_s"] = round(time.perf_counter() - t0, 3)
     return metrics
 
 

@@ -8,16 +8,14 @@ discovers exactly one table (TableDiscoveryService.java:100-111). As in
 the reference (HoodiePropertiesReader.java:37-61), a table's
 `.hoodie/hoodie.properties` is read as soon as the walk finds the table.
 
-One walk, run in two places. The driver walks breadth-first, with the
-same lister, until it has spent as long as a Spark job costs before its
-tasks do any work (``_DRIVER_WALK_BUDGET_S``). A walk that finishes
-inside that budget launches no job. Otherwise the frontier left over, a
-whole level or more, is dealt into one share per task of one
-``parallelize(...).flatMap`` job, and each task finishes the walk
-through its share's subtrees. Like renting skis until the rent paid
-equals the price, the rule needs no estimate of the lake's size or the
-lister's latency: its cost stays within about twice that of the better
-choice while a task lists no slower than the driver. Both places run
+One walk, run in two places by the driver-first rule of
+``lakeview_spark.driver_first``. The driver walks breadth-first, with
+the same lister, until it has spent ``driver_first.JOB_START_S``, what
+a Spark job costs to start. A walk that finishes inside that budget
+launches no job. Otherwise the frontier left over, a whole level or
+more, is dealt into one share per task of one job, and each task
+finishes the walk through its share's subtrees. The rule needs no
+estimate of the lake's size or the lister's latency. Both places run
 ``_walk``.
 
 The lister is pluggable: ``list_dir_local`` for local lakes, an
@@ -38,6 +36,7 @@ from typing import Callable, Iterable
 
 from pyspark.sql import SparkSession
 
+from lakeview_spark import driver_first
 from lakeview_spark.constants import HOODIE_FOLDER_NAME, HOODIE_PROPERTIES_FILE
 from lakeview_spark.functions.ids import uuid3_from_uri
 
@@ -46,11 +45,6 @@ FileEntry = tuple
 Lister = Callable[[str], "list[FileEntry]"]
 
 TABLE_ID_SEPARATOR = "#"
-
-# What a Spark job costs before its tasks do any work: median 0.32 s,
-# minimum 0.29 s over 14 warm one-slice jobs on local[4], 4-core host.
-# Unmeasured on a cluster.
-_DRIVER_WALK_BUDGET_S = 0.3
 
 
 def list_dir_local(path: str) -> list[FileEntry]:
@@ -157,14 +151,10 @@ def discover_tables(
     walk = functools.partial(
         _walk, lister=lister, patterns=list(exclusion_patterns or []), max_depth=max_depth
     )
-    found = walk(frontier, budget_s=_DRIVER_WALK_BUDGET_S)
+    found = walk(frontier, budget_s=driver_first.JOB_START_S)
     if frontier:
-        # deal the rows out round-robin, one share per task: in breadth-
-        # first order the shallow rows, whose subtrees are the larger,
-        # sit together at the front
-        left, n = list(frontier), spark.sparkContext.defaultParallelism
-        rdd = spark.sparkContext.parallelize([left[k::n] for k in range(n)], n)
-        found += rdd.flatMap(lambda share: walk(deque(share))).collect()
+        rest = list(frontier)
+        found += driver_first.finish_in_job(spark, rest, lambda share: walk(deque(share)))
 
     per_origin: dict[int, list] = {}
     for uri, i, text in found:

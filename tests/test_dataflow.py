@@ -10,6 +10,7 @@ from datetime import datetime
 
 import pytest
 
+from lakeview_spark import driver_first
 from lakeview_spark.config import load_config
 from lakeview_spark.functions.ids import uuid3_from_uri
 from lakeview_spark.operators.checkpoints import CheckpointStore
@@ -21,7 +22,6 @@ from lakeview_spark.operators.uploader import (
     start_after,
 )
 from lakeview_spark.runner import process_archived_v2, run_once
-from lakeview_spark.sources import listing
 from lakeview_spark.sources.listing import discover_tables
 from lakeview_spark.sources.properties import read_hoodie_properties
 
@@ -92,7 +92,7 @@ def test_discovery_finds_tables_and_prunes(spark, lake, monkeypatch):
     the frontier left over goes to one Spark job. Both find the same rows."""
     sc = spark.sparkContext
     for budget_s, walk_jobs in ((float("inf"), 0), (0.0, 1)):
-        monkeypatch.setattr(listing, "_DRIVER_WALK_BUDGET_S", budget_s)
+        monkeypatch.setattr(driver_first, "JOB_START_S", budget_s)
         group = f"discovery-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, "discovery walk")
         try:

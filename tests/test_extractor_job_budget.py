@@ -1,4 +1,5 @@
-"""Spark-job budget of one extractor round.
+"""Spark-job budget of one extractor round, and the two sides of its
+driver-first switch.
 
 A small V1 + V2 lake goes through `run_once` three times: cold (every
 file is new), delta (one V1 table gains a commit and the V2 manifest
@@ -7,6 +8,11 @@ job group, and the status tracker counts the jobs it launched. The
 ceilings sit a little above what the round needs today, so a per-table
 Spark job or a plan evaluated twice fails here before it shows up in a
 benchmark.
+
+Every round on these small lakes finishes on the driver, so the job
+side of the switch is run here on purpose: the same lake is uploaded
+with no driver budget (every table goes to the job) and with the
+default (every table stays on the driver), and both must agree.
 """
 
 from __future__ import annotations
@@ -15,19 +21,25 @@ import json
 import os
 import uuid
 
+import pytest
+
+from lakeview_spark import driver_first
 from lakeview_spark.config import load_config
+from lakeview_spark.functions.ids import uuid3_from_uri
+from lakeview_spark.operators.checkpoints import CheckpointStore
 from lakeview_spark.runner import run_once
 
-# Spark jobs per round. On Spark 4.1 local[4] each round takes 1 job,
-# the upload job for every table: the discovery walk, hoodie.properties
-# reads included, finishes on the driver inside its 0.3 s budget. The
-# ceiling leaves room for the one walk job a slower host may launch.
-# With a discovery job per directory level and a Spark properties read
-# the rounds took 6, 6 and 6; when the upload ran as DataFrame phases (a
-# listing, the batcher's adaptive-execution stages, a mirror and a
-# checkpoint aggregation per timeline) 37, 26 and 20; with the
-# checkpoint store on Spark jobs as well, 63, 41 and 25.
-JOB_CEILING = {"cold": 2, "delta": 2, "noop": 2}
+# Spark jobs per round. On Spark 4.1 local[4] each round takes 0 jobs:
+# the discovery walk, hoodie.properties reads included, and the upload
+# of every table both finish on the driver inside their 0.3 s budget.
+# The ceiling leaves room for the one overflow job a slower host may
+# launch. With the upload always a job the rounds took 1, 1 and 1; with
+# a discovery job per directory level and a Spark properties read 6, 6
+# and 6; when the upload ran as DataFrame phases (a listing, the
+# batcher's adaptive-execution stages, a mirror and a checkpoint
+# aggregation per timeline) 37, 26 and 20; with the checkpoint store on
+# Spark jobs as well, 63, 41 and 25.
+JOB_CEILING = {"cold": 1, "delta": 1, "noop": 1}
 
 
 def _write(path, text="x"):
@@ -104,10 +116,8 @@ def _jobs_of(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_extractor_round_job_budget(spark, tmp_path):
-    root = str(tmp_path / "lake")
-    _lake(root)
-    cfg = load_config(
+def _config(root):
+    return load_config(
         {
             "version": "V1",
             "metadataExtractorConfig": {
@@ -117,6 +127,12 @@ def test_extractor_round_job_budget(spark, tmp_path):
             },
         }
     )
+
+
+def test_extractor_round_job_budget(spark, tmp_path):
+    root = str(tmp_path / "lake")
+    _lake(root)
+    cfg = _config(root)
     state, mirror = str(tmp_path / "state"), str(tmp_path / "mirror")
 
     def round_():
@@ -134,3 +150,68 @@ def test_extractor_round_job_budget(spark, tmp_path):
 
     over = {k: (n, JOB_CEILING[k]) for k, n in jobs.items() if n > JOB_CEILING[k]}
     assert not over, f"Spark jobs per round over budget (jobs, ceiling): {over}"
+    for m in (cold, delta, noop):
+        assert m["upload_tables_in_job"] == 0  # the driver uploaded every table
+
+
+def _tree(root):
+    """Every file under ``root``: relative path -> content."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for fn in files:
+            with open(os.path.join(d, fn)) as f:
+                out[os.path.relpath(os.path.join(d, fn), root)] = f.read()
+    return out
+
+
+def test_upload_on_driver_and_in_job_agree(spark, tmp_path, monkeypatch):
+    """One lake, uploaded twice: with no driver budget every table goes
+    to the job, with the default every table stays on the driver. Both
+    give the same failure, mirror, checkpoints and metrics."""
+    root = str(tmp_path / "lake")
+    _lake(root)
+    # an in-flight commit: BLOCK_ON_INCOMPLETE_COMMIT stops v1_b before it
+    for suffix in (".commit.requested", ".inflight"):
+        _write(os.path.join(root, "db", "v1_b", ".hoodie", f"110{suffix}"))
+    blocked = uuid3_from_uri(os.path.join(root, "db", "v1_a"))
+    cfg = _config(root)
+
+    rounds, in_job = {}, {}
+    for side, budget_s in (("job", 0.0), ("driver", driver_first.JOB_START_S)):
+        monkeypatch.setattr(driver_first, "JOB_START_S", budget_s)
+        state, mirror = str(tmp_path / side / "state"), str(tmp_path / side / "mirror")
+        store = CheckpointStore(spark, os.path.join(state, "checkpoints"))
+        # a regular file where v1_a's mirror directory must go
+        _write(os.path.join(mirror, blocked), "not a directory")
+        with pytest.raises(RuntimeError) as failure:
+            run_once(spark, cfg, state, mirror)
+        error = str(failure.value).replace(mirror, "<mirror>")
+        failed = {"error": error, "ckpts": store.snapshot(), "tree": _tree(mirror)}
+
+        os.remove(os.path.join(mirror, blocked))
+        metrics = run_once(spark, cfg, state, mirror)
+        in_job[side] = metrics.pop("upload_tables_in_job")
+        metrics.pop("elapsed_s")
+        after = {"metrics": metrics, "ckpts": store.snapshot(), "tree": _tree(mirror)}
+        rounds[side] = (failed, after)
+
+    assert in_job == {"job": 5, "driver": 0}
+    assert rounds["job"] == rounds["driver"]
+
+    failed, after = rounds["driver"]
+    assert failed["error"].startswith(f"upload failed for 1 table(s) ['{blocked}']")
+    ckpts = failed["ckpts"]
+    assert ckpts[blocked]["batch_id"] == 0 and ckpts[blocked]["last_uploaded_file"] == ""
+    assert not ckpts[blocked]["archived_commits_processed"]
+    assert [path for path in failed["tree"] if path.startswith(blocked)] == [blocked]
+    # the other tables advanced in the failed round
+    v1_b = uuid3_from_uri(os.path.join(root, "db", "v1_b"))
+    assert ckpts[v1_b]["last_uploaded_file"] == "105.commit"  # stopped at 110
+    for name in V2_TABLES:
+        v2 = uuid3_from_uri(os.path.join(root, "db", name))
+        assert ckpts[v2]["last_archived_manifest_version"] == 1
+    # unblocked, the next round uploads v1_a alone: two archive files and
+    # hoodie.properties, then five commits of three files each
+    assert after["metrics"]["archived_batched_files"] == 3
+    assert after["metrics"]["active_batched_files"] == 15
+    assert after["ckpts"][blocked]["last_uploaded_file"] == "105.commit"

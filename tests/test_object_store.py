@@ -9,7 +9,7 @@ from datetime import datetime
 
 import pytest
 
-from lakeview_spark.sources import listing
+from lakeview_spark import driver_first
 from lakeview_spark.sources.listing import discover_tables
 from lakeview_spark.sources.object_store import (
     EPOCH,
@@ -149,7 +149,7 @@ def test_discovery_runs_through_object_store_lister(spark, monkeypatch):
     # no driver budget: the walk goes to a Spark job at once, so the
     # lister and the fake client (it lives in this test module) ship to
     # executors
-    monkeypatch.setattr(listing, "_DRIVER_WALK_BUDGET_S", 0.0)
+    monkeypatch.setattr(driver_first, "JOB_START_S", 0.0)
     spark.sparkContext.addPyFile(__file__)
     # two tables under one lake prefix; .hoodie marker stops descent
     objects = {
