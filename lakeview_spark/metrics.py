@@ -137,13 +137,22 @@ def observe_run_metrics(registry: MetricsRegistry, run_metrics: dict) -> None:
     if "tables_discovered" in run_metrics:
         registry.set_gauge(TABLES_DISCOVERED_GAUGE, run_metrics["tables_discovered"])
         registry.increment(TABLE_DISCOVERY_SUCCESS_COUNTER)
-    if run_metrics.get("succeeded") is False:
-        # the reference tags discovery failures with a discover-reason
+    elif run_metrics.get("succeeded") is False and run_metrics.get("kind") != "upload_poll":
+        # discovery failed: a failed round that got past discovery carries
+        # its counts, and an upload poll runs no discovery. The reference
+        # tags discovery failures with a discover-reason
         # (LakeViewExtractorMetrics.java:79-81); the runner's event dict
         # carries no typed reason, so UNKNOWN — the enum's catch-all
         registry.increment(
             TABLE_DISCOVERY_FAILURE_COUNTER,
             {METADATA_DISCOVER_FAILURE_REASON_TAG_KEY: "UNKNOWN"},
+        )
+    failed_uploads = len(run_metrics.get("failed_table_ids", ()))
+    if failed_uploads:
+        registry.increment(
+            TABLE_METADATA_PROCESSING_FAILURE_COUNTER,
+            {METADATA_UPLOAD_FAILURE_REASON_TAG_KEY: "UNKNOWN"},
+            by=failed_uploads,
         )
     if "tables_initialized" in run_metrics:
         # tables entering processing this round (the processed gauge is

@@ -9,16 +9,19 @@ each step listing -> filter -> sort -> batch -> mirror -> checkpoint.
 The reference runs tables in batches of 20 on a thread pool. Here the
 upload follows the same driver-first rule as discovery
 (lakeview_spark.driver_first): the driver uploads one table after
-another, in table_uri order, until it has spent what a Spark job costs
-to start; the tables left over go to one Spark job, dealt round-robin
-over its tasks (parallelism across tables = Spark tasks, order within a
-table kept inside one call, SURVEY.md:240). A table's metadata is KBs,
-so a steady round, where few files are new, finishes on the driver and
-launches no job. The per-table control state (the table list,
-checkpoints, manifest versions) stays in plain Python on the driver:
-one checkpoint snapshot goes out and one upsert writes back what the
-calls return. A failed table keeps the progress of its finished steps
-and does not stop the others; the round then raises, naming it.
+another, in table_uri order, until it has spent what the Spark job it
+would launch costs to start (an application's first job costs several
+times a warm one); the tables left over go to one Spark job, dealt
+round-robin over its tasks (parallelism across tables = Spark tasks,
+order within a table kept inside one call, SURVEY.md:240). A table's
+metadata is KBs, so a steady round, where few files are new, finishes
+on the driver and launches no job, and so does a small lake's cold
+round. The per-table control state (the table list, checkpoints,
+manifest versions) stays in plain Python on the driver: one checkpoint
+snapshot goes out and one upsert writes back what the calls return. A
+failed table keeps the progress of its finished steps and does not stop
+the others; the round then raises an UploadRoundError naming it and
+carrying the round's metrics.
 
 CONTINUOUS mode (§3.2, run_continuous) runs the two phases on the
 reference's own schedules: discovery every 30 min, an upload poll every
@@ -62,6 +65,18 @@ from lakeview_spark.operators.uploader import (
 )
 from lakeview_spark.sources.listing import FileEntry, Lister, discover_tables, list_dir_local
 from lakeview_spark.sources.properties import read_hoodie_properties
+
+
+class UploadRoundError(RuntimeError):
+    """An upload round that failed: some of its tables
+    (``failed_table_ids``, sorted), or the phase itself (no ids).
+    ``metrics`` are the round's counts, the tables that did upload
+    included; run_once adds discovery's."""
+
+    def __init__(self, message: str, metrics: dict, failed_table_ids: list[str]):
+        super().__init__(message)
+        self.metrics = metrics
+        self.failed_table_ids = failed_table_ids
 
 
 def timeline_dir(table_uri: str, layout_version: int, timeline_type: str) -> str:
@@ -337,14 +352,19 @@ def discover_round(
     the enriched table list (the `tablesToProcess` snapshot of
     TableDiscoveryAndUploadJob.java:43,150-156) and its metrics. An
     unreadable or corrupt file gives its table a failure_reason
-    (ParsedHudiProperties.java:16-22) instead of failing the run."""
-    tables = discover_tables(spark, config.parser_config, config.path_exclusion_patterns, lister)
+    (ParsedHudiProperties.java:16-22) instead of failing the run.
+    ``discover_dirs_in_job`` counts the frontier directories the walk
+    shipped to a Spark job (0 when it finished on the driver)."""
+    tables, dirs_in_job = discover_tables(
+        spark, config.parser_config, config.path_exclusion_patterns, lister
+    )
     for t in tables:
         t.update(read_hoodie_properties(t.pop("properties_text")))
     failed = {t["table_uri"] for t in tables if t["failure_reason"]}
     return tables, {
         "tables_discovered": len(tables),
         "table_metadata_processing_failures": len(failed),
+        "discover_dirs_in_job": dirs_in_job,
     }
 
 
@@ -362,13 +382,14 @@ def upload_round(
     CONTINUOUS mode can run the two on independent cadences.
 
     upload_table runs on the driver, table after table in the order
-    given (discovery's table_uri order), until ``driver_first.JOB_START_S``
-    is spent; the tables left over go to one Spark job, and
-    ``upload_tables_in_job`` reports how many (0 when the driver
-    finished). The checkpoints go out as one snapshot and come back as
-    one upsert of the changed rows. If any table failed, the round raises
-    after that upsert, so the tables that succeeded (and the finished
-    steps of those that did not) keep their progress."""
+    given (discovery's table_uri order), until
+    ``driver_first.job_start_s(spark)`` is spent; the tables left over go
+    to one Spark job, and ``upload_tables_in_job`` reports how many (0
+    when the driver finished). The checkpoints go out as one snapshot and
+    come back as one upsert of the changed rows. If any table failed, the
+    round raises an UploadRoundError after that upsert, so the tables
+    that succeeded (and the finished steps of those that did not) keep
+    their progress, and the error carries the round's metrics."""
     metrics: dict = {}
     store = CheckpointStore(spark, os.path.join(state_dir, "checkpoints"))
     metrics["tables_initialized"] = store.initialize_tables(t["table_id"] for t in tables)
@@ -383,8 +404,9 @@ def upload_round(
     items = [(t, ckpts[t["table_id"]]) for t in healthy]
     task = functools.partial(upload_table, config=config, mirror_dir=mirror_dir, lister=lister)
     results: list[dict] = []
+    budget_s = driver_first.job_start_s(spark)
     start = time.perf_counter()
-    while len(results) < len(items) and time.perf_counter() - start < driver_first.JOB_START_S:
+    while len(results) < len(items) and time.perf_counter() - start < budget_s:
         results.append(task(items[len(results)]))
     rest = items[len(results) :]
     if rest:
@@ -408,9 +430,11 @@ def upload_round(
     # sorted, so the message does not depend on which side ran a table
     failed = sorted((r for r in results if r["error"]), key=lambda r: r["table_id"])
     if failed:
-        raise RuntimeError(
-            f"upload failed for {len(failed)} table(s) "
-            f"{[r['table_id'] for r in failed]}; first error:\n{failed[0]['error']}"
+        ids = [r["table_id"] for r in failed]
+        raise UploadRoundError(
+            f"upload failed for {len(failed)} table(s) {ids}; first error:\n{failed[0]['error']}",
+            metrics,
+            ids,
         )
     return metrics
 
@@ -424,14 +448,29 @@ def run_once(
 ) -> dict:
     """One extractor round (ONCE mode): discovery then upload, fused
     (runOnce, TableDiscoveryAndUploadJob.java:88-101). Returns a metrics
-    dict (SURVEY §2.4 A5)."""
+    dict (SURVEY §2.4 A5). A failure after discovery raises an
+    UploadRoundError that carries discovery's metrics too, so it is not
+    taken for a failed discovery."""
     t0 = time.perf_counter()
     tables, metrics = discover_round(spark, config, lister)
-    metrics.update(
-        upload_round(spark, config, tables, state_dir, mirror_dir, lister)
-    )
+    try:
+        metrics.update(upload_round(spark, config, tables, state_dir, mirror_dir, lister))
+    except UploadRoundError as ex:
+        ex.metrics = {**metrics, **ex.metrics}
+        raise
+    except Exception as ex:  # the phase itself failed, not one table
+        raise UploadRoundError(f"upload round failed: {ex!r}", metrics, []) from ex
     metrics["elapsed_s"] = round(time.perf_counter() - t0, 3)
     return metrics
+
+
+def _failure(ex: Exception) -> dict:
+    """A failed round's event fields: the counts a failed upload round
+    carries, ``succeeded: False`` and the error."""
+    out = {}
+    if isinstance(ex, UploadRoundError):
+        out = {**ex.metrics, "failed_table_ids": ex.failed_table_ids}
+    return {**out, "succeeded": False, "error": repr(ex)}
 
 
 def run_continuous(
@@ -568,8 +607,7 @@ def run_continuous(
                 ev["succeeded"] = True
             except Exception as ex:  # noqa: BLE001 — poll schedule survives
                 log.warning("upload round failed: %r", ex)
-                ev["succeeded"] = False
-                ev["error"] = repr(ex)
+                ev.update(_failure(ex))
             prev_upload_start = now
         emit(ev)
         next_poll = now + poll_every
@@ -640,7 +678,7 @@ def run_once_with_retry(
             metrics = run_fn(spark, config, state_dir, mirror_dir, lister)
             metrics["succeeded"] = True
         except Exception as ex:  # noqa: BLE001 — retryable by policy
-            metrics = {"succeeded": False, "error": repr(ex)}
+            metrics = _failure(ex)
         attempts.append(metrics)
         if metrics["succeeded"]:
             break

@@ -10,13 +10,13 @@ the reference (HoodiePropertiesReader.java:37-61), a table's
 
 One walk, run in two places by the driver-first rule of
 ``lakeview_spark.driver_first``. The driver walks breadth-first, with
-the same lister, until it has spent ``driver_first.JOB_START_S``, what
-a Spark job costs to start. A walk that finishes inside that budget
-launches no job. Otherwise the frontier left over, a whole level or
-more, is dealt into one share per task of one job, and each task
-finishes the walk through its share's subtrees. The rule needs no
-estimate of the lake's size or the lister's latency. Both places run
-``_walk``.
+the same lister, until it has spent ``driver_first.job_start_s``, what
+the Spark job it would launch costs to start. A walk that finishes
+inside that budget launches no job. Otherwise the frontier left over, a
+whole level or more, is dealt into one share per task of one job, and
+each task finishes the walk through its share's subtrees. The rule
+needs no estimate of the lake's size or the lister's latency. Both
+places run ``_walk``.
 
 The lister is pluggable: ``list_dir_local`` for local lakes, an
 ``ObjectStoreLister`` (sources/object_store.py) for S3/GCS/ABFS. The
@@ -131,12 +131,14 @@ def discover_tables(
     exclusion_patterns: list[str] | None = None,
     lister: Lister = list_dir_local,
     max_depth: int = 64,
-) -> list[dict]:
+) -> tuple[list[dict], int]:
     """Walk every base path -> one dict per table (table_id, table_uri,
-    lake, database, properties_text), sorted by table_uri.
-    ``properties_text`` is the table's hoodie.properties, None when it
-    could not be read. The list stays on the driver: the extractor round
-    keeps its per-table control state there.
+    lake, database, properties_text), sorted by table_uri, and the
+    number of frontier directories the walk shipped to a Spark job (0
+    when it finished on the driver). ``properties_text`` is the table's
+    hoodie.properties, None when it could not be read. The list stays on
+    the driver: the extractor round keeps its per-table control state
+    there.
 
     ``parser_config``: [{lake, databases: [{name, basePaths: [...]}]}]
     (ConfigV1 parserConfig shape, configv1/ParserConfig.java:12-15).
@@ -151,10 +153,10 @@ def discover_tables(
     walk = functools.partial(
         _walk, lister=lister, patterns=list(exclusion_patterns or []), max_depth=max_depth
     )
-    found = walk(frontier, budget_s=driver_first.JOB_START_S)
+    found = walk(frontier, budget_s=driver_first.job_start_s(spark))
+    dirs_in_job = len(frontier)
     if frontier:
-        rest = list(frontier)
-        found += driver_first.finish_in_job(spark, rest, lambda share: walk(deque(share)))
+        found += driver_first.finish_in_job(spark, list(frontier), lambda share: walk(deque(share)))
 
     per_origin: dict[int, list] = {}
     for uri, i, text in found:
@@ -181,4 +183,4 @@ def discover_tables(
                     "properties_text": text,
                 },
             )
-    return sorted(rows.values(), key=lambda r: r["table_uri"])
+    return sorted(rows.values(), key=lambda r: r["table_uri"]), dirs_in_job

@@ -56,13 +56,15 @@ def test_once_with_retry_policy():
 
 from datetime import datetime
 
+import pytest
+
 from lakeview_spark.config import (
     load_config,
     minutes_until_next_cron,
     next_cron_execution,
 )
 from lakeview_spark import runner as runner_mod
-from lakeview_spark.runner import run_continuous, run_once_with_retry
+from lakeview_spark.runner import UploadRoundError, run_continuous, run_once_with_retry
 
 
 def test_next_cron_execution_hourly_default():
@@ -293,6 +295,42 @@ def test_continuous_mode_survives_failing_rounds_and_counts_them(monkeypatch):
     assert "sink exploded" in uploads[0]["error"]
     assert uploads[1]["tables_initialized"] == 2
     assert [e["t"] for e in uploads] == [0.0, 120.0]
+
+
+def test_failed_upload_round_keeps_its_counts(monkeypatch):
+    """An UploadRoundError's metrics and failed tables ride beside
+    ``succeeded: False`` in a ONCE_WITH_RETRY attempt and in a CONTINUOUS
+    upload_poll event."""
+    counts = {"tables_initialized": 2, "upload_tables_in_job": 0, "active_batched_files": 3}
+
+    def failing_upload(*_):
+        raise UploadRoundError("upload failed for 1 table(s) ['b']", dict(counts), ["b"])
+
+    attempts = run_once_with_retry(
+        None,
+        _retry_cfg(cronScheduleForPullModel="0 */6 * * *", maxRunCountForPullModel=1),
+        "/tmp/unused",
+        start_time=datetime(2026, 3, 1, 1, 0),
+        run_fn=failing_upload,
+    )
+    _stub_rounds(monkeypatch, failing_upload)
+    events = run_continuous(
+        None, load_config(_continuous_base()), "/tmp/unused", max_events=2, sleep_fn=lambda s: None
+    )
+    for failed in (attempts[0], events[1]):
+        assert failed["succeeded"] is False and "upload failed" in failed["error"]
+        assert {k: failed[k] for k in counts} == counts
+        assert failed["failed_table_ids"] == ["b"]
+
+    # a whole-phase failure after discovery still carries discovery's counts
+    def broken_store(config):
+        raise OSError("checkpoint store unreadable")
+
+    _stub_rounds(monkeypatch, broken_store)
+    with pytest.raises(UploadRoundError) as failure:
+        runner_mod.run_once(None, load_config(_continuous_base()), "/tmp/unused")
+    assert failure.value.metrics == {"tables_discovered": 1}
+    assert failure.value.failed_table_ids == []
 
 
 def test_continuous_mode_counts_config_refresh_failures(monkeypatch):

@@ -92,16 +92,17 @@ def test_discovery_finds_tables_and_prunes(spark, lake, monkeypatch):
     the frontier left over goes to one Spark job. Both find the same rows."""
     sc = spark.sparkContext
     for budget_s, walk_jobs in ((float("inf"), 0), (0.0, 1)):
-        monkeypatch.setattr(driver_first, "JOB_START_S", budget_s)
+        monkeypatch.setattr(driver_first, "job_start_s", lambda spark, s=budget_s: s)
         group = f"discovery-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, "discovery walk")
         try:
-            tables = discover_tables(
+            tables, dirs_in_job = discover_tables(
                 spark, PARSER_CFG(lake), exclusion_patterns=[r".*excluded.*"]
             )
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == walk_jobs
+        assert (dirs_in_job > 0) == (walk_jobs == 1)
         rows = {r["table_uri"]: r for r in tables}
         assert set(rows) == {f"{lake}/tbl1", f"{lake}/nested/tbl2"}
         r = rows[f"{lake}/tbl1"]
@@ -117,7 +118,7 @@ def test_discovery_table_id_override(spark, lake):
             "databases": [{"name": "db1", "basePaths": [f"{lake}/tbl1#my-pinned-id"]}],
         }
     ]
-    rows = discover_tables(spark, cfg)
+    rows, _ = discover_tables(spark, cfg)
     assert len(rows) == 1 and rows[0]["table_id"] == "my-pinned-id"
 
 
@@ -129,7 +130,7 @@ def test_discovery_override_requires_exactly_one(spark, lake):
         }
     ]
     # base path discovers 3 tables -> override skipped entirely (O3)
-    assert len(discover_tables(spark, cfg)) == 0
+    assert len(discover_tables(spark, cfg)[0]) == 0
 
 
 def test_properties_reader_defaults():

@@ -12,13 +12,16 @@ benchmark.
 Every round on these small lakes finishes on the driver, so the job
 side of the switch is run here on purpose: the same lake is uploaded
 with no driver budget (every table goes to the job) and with the
-default (every table stays on the driver), and both must agree.
+default (every table stays on the driver), and both must agree. The
+budget itself is the price of the job a round would launch: the
+application's first job until one has run, a warm job after.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 
 import pytest
@@ -27,11 +30,13 @@ from lakeview_spark import driver_first
 from lakeview_spark.config import load_config
 from lakeview_spark.functions.ids import uuid3_from_uri
 from lakeview_spark.operators.checkpoints import CheckpointStore
-from lakeview_spark.runner import run_once
+from lakeview_spark.runner import UploadRoundError, run_once
+from lakeview_spark.sources.listing import list_dir_local
 
 # Spark jobs per round. On Spark 4.1 local[4] each round takes 0 jobs:
 # the discovery walk, hoodie.properties reads included, and the upload
-# of every table both finish on the driver inside their 0.3 s budget.
+# of every table both finish on the driver inside their budget (0.3 s
+# or more).
 # The ceiling leaves room for the one overflow job a slower host may
 # launch. With the upload always a job the rounds took 1, 1 and 1; with
 # a discovery job per directory level and a Spark properties read 6, 6
@@ -167,7 +172,8 @@ def _tree(root):
 def test_upload_on_driver_and_in_job_agree(spark, tmp_path, monkeypatch):
     """One lake, uploaded twice: with no driver budget every table goes
     to the job, with the default every table stays on the driver. Both
-    give the same failure, mirror, checkpoints and metrics."""
+    give the same failure (its metrics included), mirror, checkpoints
+    and metrics."""
     root = str(tmp_path / "lake")
     _lake(root)
     # an in-flight commit: BLOCK_ON_INCOMPLETE_COMMIT stops v1_b before it
@@ -176,22 +182,35 @@ def test_upload_on_driver_and_in_job_agree(spark, tmp_path, monkeypatch):
     blocked = uuid3_from_uri(os.path.join(root, "db", "v1_a"))
     cfg = _config(root)
 
+    def side_of(metrics):
+        """Pop what depends on the side that ran: (tables uploaded in the
+        job, whether the walk shipped directories)."""
+        metrics.pop("elapsed_s", None)
+        return metrics.pop("upload_tables_in_job"), metrics.pop("discover_dirs_in_job") > 0
+
     rounds, in_job = {}, {}
-    for side, budget_s in (("job", 0.0), ("driver", driver_first.JOB_START_S)):
-        monkeypatch.setattr(driver_first, "JOB_START_S", budget_s)
+    for side, price in (("job", lambda spark: 0.0), ("driver", driver_first.job_start_s)):
+        monkeypatch.setattr(driver_first, "job_start_s", price)
         state, mirror = str(tmp_path / side / "state"), str(tmp_path / side / "mirror")
         store = CheckpointStore(spark, os.path.join(state, "checkpoints"))
         # a regular file where v1_a's mirror directory must go
         _write(os.path.join(mirror, blocked), "not a directory")
-        with pytest.raises(RuntimeError) as failure:
+        with pytest.raises(UploadRoundError) as failure:
             run_once(spark, cfg, state, mirror)
         error = str(failure.value).replace(mirror, "<mirror>")
-        failed = {"error": error, "ckpts": store.snapshot(), "tree": _tree(mirror)}
+        failed_side = side_of(failure.value.metrics)
+        failed = {
+            "error": error,
+            "metrics": failure.value.metrics,
+            "ids": failure.value.failed_table_ids,
+            "ckpts": store.snapshot(),
+            "tree": _tree(mirror),
+        }
 
         os.remove(os.path.join(mirror, blocked))
         metrics = run_once(spark, cfg, state, mirror)
-        in_job[side] = metrics.pop("upload_tables_in_job")
-        metrics.pop("elapsed_s")
+        assert side_of(metrics) == failed_side
+        in_job[side] = failed_side[0]
         after = {"metrics": metrics, "ckpts": store.snapshot(), "tree": _tree(mirror)}
         rounds[side] = (failed, after)
 
@@ -200,6 +219,12 @@ def test_upload_on_driver_and_in_job_agree(spark, tmp_path, monkeypatch):
 
     failed, after = rounds["driver"]
     assert failed["error"].startswith(f"upload failed for 1 table(s) ['{blocked}']")
+    assert failed["ids"] == [blocked]
+    # the failed round keeps its counts: discovery's, and the four tables
+    # that uploaded (v1_b stops before its in-flight commit)
+    assert failed["metrics"]["tables_discovered"] == 5
+    assert failed["metrics"]["v2_files_uploaded"] == 2
+    assert failed["metrics"]["archived_batched_files"] == 2  # v1_b's archive + properties
     ckpts = failed["ckpts"]
     assert ckpts[blocked]["batch_id"] == 0 and ckpts[blocked]["last_uploaded_file"] == ""
     assert not ckpts[blocked]["archived_commits_processed"]
@@ -215,3 +240,32 @@ def test_upload_on_driver_and_in_job_agree(spark, tmp_path, monkeypatch):
     assert after["metrics"]["archived_batched_files"] == 3
     assert after["metrics"]["active_batched_files"] == 15
     assert after["ckpts"][blocked]["last_uploaded_file"] == "105.commit"
+
+
+def test_first_job_priced_until_the_application_has_run_one(spark, tmp_path, monkeypatch):
+    """A round whose driver work costs more than a warm job's start but
+    less than the application's first job's stays on the driver until
+    the application has run an extractor job, and ships after."""
+    root = str(tmp_path / "lake")
+    _lake(root)
+    cfg = _config(root)
+
+    def slow_lister(path):  # 7 discovery and 8 timeline listings a cold round
+        time.sleep(0.06)
+        return list_dir_local(path)
+
+    def cold_round(name):
+        state, mirror = str(tmp_path / name / "state"), str(tmp_path / name / "mirror")
+        metrics, jobs = _jobs_of(spark, lambda: run_once(spark, cfg, state, mirror, slow_lister))
+        store = CheckpointStore(spark, os.path.join(state, "checkpoints"))
+        return metrics, jobs, (store.snapshot(), _tree(mirror))
+
+    monkeypatch.setattr(driver_first, "_warm_app_id", None)
+    first, first_jobs, first_out = cold_round("first")
+    assert first_jobs == 0
+    assert first["upload_tables_in_job"] == 0 and first["discover_dirs_in_job"] == 0
+
+    driver_first.finish_in_job(spark, [0], lambda share: share)
+    warm, warm_jobs, warm_out = cold_round("warm")
+    assert warm_jobs >= 1 and warm["upload_tables_in_job"] > 0
+    assert warm_out == first_out

@@ -14,6 +14,7 @@ from lakeview_spark.metrics import (
     METADATA_UPLOAD_FAILURE_REASONS,
     METADATA_UPLOAD_SUCCESS_COUNTER,
     PROMETHEUS_METRICS_SCRAPING_DISABLED,
+    TABLE_DISCOVERY_FAILURE_COUNTER,
     TABLE_DISCOVERY_SUCCESS_COUNTER,
     TABLE_METADATA_PROCESSING_FAILURE_COUNTER,
     TABLES_DISCOVERED_GAUGE,
@@ -81,6 +82,25 @@ def test_discovery_failure_carries_discover_reason_tag():
     observe_run_metrics(reg, {"succeeded": False, "error": "boom"})
     body = reg.render()
     assert 'metadata_discover_failure_reason="UNKNOWN"' in body
+
+
+def test_upload_failures_are_not_discovery_failures():
+    """A failed upload (an upload poll, or a ONCE_WITH_RETRY attempt that
+    got past discovery) counts its failed tables as processing failures,
+    not as a discovery failure; a failed discovery still counts as one."""
+    reg = MetricsRegistry()
+    failed_upload = {"succeeded": False, "error": "boom", "failed_table_ids": ["a", "b"]}
+    observe_run_metrics(reg, {"kind": "upload_poll", "tables_initialized": 0, **failed_upload})
+    observe_run_metrics(reg, {"tables_discovered": 3, "active_batched_files": 4, **failed_upload})
+    observe_run_metrics(reg, {"kind": "discovery", "succeeded": False, "error": "boom"})
+    body = reg.render()
+    assert (
+        f'{TABLE_METADATA_PROCESSING_FAILURE_COUNTER}{{metadata_upload_failure_reason="UNKNOWN"}} 4'
+        in body
+    )
+    assert f'{TABLE_DISCOVERY_FAILURE_COUNTER}{{metadata_discover_failure_reason="UNKNOWN"}} 1' in body
+    assert f"{TABLE_DISCOVERY_SUCCESS_COUNTER} 1" in body
+    assert f"{METADATA_UPLOAD_SUCCESS_COUNTER} 4" in body
 
 
 def test_continuous_runner_observes_each_round_live(monkeypatch):

@@ -149,7 +149,7 @@ def test_discovery_runs_through_object_store_lister(spark, monkeypatch):
     # no driver budget: the walk goes to a Spark job at once, so the
     # lister and the fake client (it lives in this test module) ship to
     # executors
-    monkeypatch.setattr(driver_first, "JOB_START_S", 0.0)
+    monkeypatch.setattr(driver_first, "job_start_s", lambda spark: 0.0)
     spark.sparkContext.addPyFile(__file__)
     # two tables under one lake prefix; .hoodie marker stops descent
     objects = {
@@ -162,7 +162,7 @@ def test_discovery_runs_through_object_store_lister(spark, monkeypatch):
     }
     fake = FakePageClient(objects, page_size=2)
     store = ObjectStoreLister(lambda: fake)
-    tables = discover_tables(
+    tables, _ = discover_tables(
         spark,
         [{"lake": "l1", "databases": [{"name": "db1", "basePaths": ["s3://lake/warehouse/db1"]}]}],
         lister=store.as_lister(),
@@ -666,7 +666,7 @@ def test_azure_discovery_end_to_end(spark):
     client = AzurePageClient(lambda container: fs)
     store = ObjectStoreLister(lambda: client)
     base = "abfss://cont@acct.dfs.core.windows.net/warehouse/db1"
-    tables = discover_tables(
+    tables, _ = discover_tables(
         spark,
         [
             {
